@@ -1,118 +1,43 @@
-"""Minimal pure-Python Avro object-container READER for Iceberg
+"""Minimal pure-Python Avro object-container codec for Iceberg
 metadata files (public Avro 1.x spec, container format + binary
 encoding). Scope: exactly the subset Iceberg manifests / manifest
 lists use — records, strings, bytes, int/long (zigzag varint), float,
 double, boolean, null, unions, arrays, maps, fixed, enums — with
 ``null`` and ``deflate`` block codecs (what real Iceberg writers emit).
 
-Why it exists: ``iceberg_reader._avro_records`` goes through the JVM
+Why it exists: ``iceberg_reader`` would otherwise go through the JVM
 Avro library via py4j, which costs a py4j round-trip PER FIELD ACCESS
 and requires a live SparkSession — unusable inside Python DataSource
-planning. This decoder reads the same files driver-side in plain
-Python (a manifest is metadata-sized: KBs to a few MB), returning
-plain dicts.
+planning. This codec reads the same files driver-side in plain Python
+(a manifest is metadata-sized: KBs to a few MB).
 
-Not a general Avro implementation (no logical-type coercion — Iceberg
-readers interpret raw values; no schema resolution against a reader
-schema — container files are self-describing and we read with the
-writer schema, which is exactly how manifest readers work).
+ONE decoder: for each (writer schema, projection) pair the reader
+generates the source of one Python function that decodes a whole
+record block — varints, strings and nested values inlined, fields
+outside the projection skipped without building values — compiles it
+once and caches it for the process (``_block_decoder``). A projection
+(``read_avro_file(path, project=...)``) yields one flat tuple per
+record holding only the requested field paths; the full-record read is
+the all-fields projection of the same generator, emitting dicts. A
+manifest walk that needs a dozen of an entry's ~25 fields then touches
+each value once, instead of building nested dicts and walking them
+again.
+
+Not a general Avro implementation: no logical-type coercion (Iceberg
+readers interpret raw values), no schema resolution against a reader
+schema (container files are self-describing and are read with the
+writer schema, which is exactly how manifest readers work), and no
+recursive named types (no Iceberg metadata schema has one).
 """
 
 from __future__ import annotations
 
-import io
 import json
 import struct
 import zlib
-from typing import Any, BinaryIO
+from typing import Any, Iterable
 
 _MAGIC = b"Obj\x01"
-
-
-def _read_long(buf: BinaryIO) -> int:
-    """Zigzag varint (Avro int/long share the encoding)."""
-    shift = 0
-    acc = 0
-    while True:
-        b = buf.read(1)
-        if not b:
-            raise EOFError("truncated varint")
-        byte = b[0]
-        acc |= (byte & 0x7F) << shift
-        if not byte & 0x80:
-            break
-        shift += 7
-    return (acc >> 1) ^ -(acc & 1)
-
-
-def _read_bytes(buf: BinaryIO) -> bytes:
-    n = _read_long(buf)
-    out = buf.read(n)
-    if len(out) != n:
-        raise EOFError("truncated bytes")
-    return out
-
-
-def _read_blocks(buf: BinaryIO, read_item) -> list:
-    """Array/map block sequence: count [size] items..., 0-terminated;
-    negative count = block byte size follows (skippable form)."""
-    out = []
-    while True:
-        n = _read_long(buf)
-        if n == 0:
-            return out
-        if n < 0:
-            n = -n
-            _read_long(buf)  # block byte size, unused
-        for _ in range(n):
-            out.append(read_item())
-
-
-def _decode(schema: Any, buf: BinaryIO, names: dict[str, Any]) -> Any:
-    if isinstance(schema, list):  # union: varint branch index
-        idx = _read_long(buf)
-        return _decode(schema[idx], buf, names)
-    if isinstance(schema, str):
-        t = schema
-        if t in names:
-            return _decode(names[t], buf, names)
-    else:
-        t = schema["type"]
-    if t == "null":
-        return None
-    if t == "boolean":
-        return buf.read(1) == b"\x01"
-    if t in ("int", "long"):
-        return _read_long(buf)
-    if t == "float":
-        return struct.unpack("<f", buf.read(4))[0]
-    if t == "double":
-        return struct.unpack("<d", buf.read(8))[0]
-    if t == "bytes":
-        return _read_bytes(buf)
-    if t == "string":
-        return _read_bytes(buf).decode("utf-8")
-    if t == "record":
-        _register(schema, names)
-        return {
-            f["name"]: _decode(f["type"], buf, names)
-            for f in schema["fields"]
-        }
-    if t == "array":
-        return _read_blocks(buf, lambda: _decode(schema["items"], buf, names))
-    if t == "map":
-        def kv():
-            k = _read_bytes(buf).decode("utf-8")
-            return (k, _decode(schema["values"], buf, names))
-
-        return dict(_read_blocks(buf, kv))
-    if t == "fixed":
-        _register(schema, names)
-        return buf.read(int(schema["size"]))
-    if t == "enum":
-        _register(schema, names)
-        return schema["symbols"][_read_long(buf)]
-    raise NotImplementedError(f"Avro type {t!r} beyond this reader")
 
 
 def _register(schema: dict, names: dict[str, Any]) -> None:
@@ -123,188 +48,475 @@ def _register(schema: dict, names: dict[str, Any]) -> None:
         names.setdefault(schema["name"], schema)
 
 
-# ---------------------------------------------------------------------------
-# COMPILED decoder (r8): the interpreted ``_decode`` re-dispatches on
-# the schema dict for EVERY value — measurable at metadata scale (a
-# 10k-entry manifest walk spent ~85% of plan time in schema dispatch).
-# ``_compile`` builds a closure tree ONCE per file; each closure takes
-# ``(data: bytes, pos: int) -> (value, new_pos)`` with the varint
-# inlined. Same wire format, same output dicts — ``test_avro_codec``
-# pins byte-level conformance and the fast/slow paths' equality.
-
-
-def _compile(schema: Any, names: dict[str, Any]):
-    if isinstance(schema, list):
-        branches = [_compile(b, names) for b in schema]
-
-        def c_union(data, pos, _b=branches):
-            acc = 0
-            shift = 0
-            while True:
-                byte = data[pos]
-                pos += 1
-                acc |= (byte & 0x7F) << shift
-                if not byte & 0x80:
-                    break
-                shift += 7
-            return _b[(acc >> 1) ^ -(acc & 1)](data, pos)
-
-        return c_union
-    if isinstance(schema, str):
-        t = schema
-        if t in names:
-            # late-bound named ref (the compiled fn registers under
-            # the same name before its fields compile, so even
-            # self-references would resolve)
-            def c_ref(data, pos, _names=names, _t=t):
-                return _names[_t](data, pos)
-
-            return c_ref
-    else:
-        t = schema["type"]
-    if t == "null":
-        return lambda data, pos: (None, pos)
-    if t == "boolean":
-        return lambda data, pos: (data[pos] == 1, pos + 1)
-    if t in ("int", "long"):
-        def c_long(data, pos):
-            acc = 0
-            shift = 0
-            while True:
-                byte = data[pos]
-                pos += 1
-                acc |= (byte & 0x7F) << shift
-                if not byte & 0x80:
-                    break
-                shift += 7
+def _varint(data: bytes, pos: int) -> tuple[int, int]:
+    """Zigzag varint at ``pos`` (Avro int/long share the encoding):
+    ``(value, next pos)``. Generated decoders inline the one-byte case
+    and call this for longer ones."""
+    acc = 0
+    shift = 0
+    while True:
+        b = data[pos]
+        pos += 1
+        acc |= (b & 0x7F) << shift
+        if b < 0x80:
             return (acc >> 1) ^ -(acc & 1), pos
+        shift += 7
 
-        return c_long
-    if t == "float":
-        def c_float(data, pos):
-            return struct.unpack_from("<f", data, pos)[0], pos + 4
 
-        return c_float
-    if t == "double":
-        def c_double(data, pos):
-            return struct.unpack_from("<d", data, pos)[0], pos + 8
+# ---------------------------------------------------------------------------
+# block-decoder generator
 
-        return c_double
-    if t in ("bytes", "string"):
-        as_str = t == "string"
 
-        def c_bytes(data, pos, _s=as_str):
-            acc = 0
-            shift = 0
-            while True:
-                byte = data[pos]
-                pos += 1
-                acc |= (byte & 0x7F) << shift
-                if not byte & 0x80:
-                    break
-                shift += 7
-            n = (acc >> 1) ^ -(acc & 1)
-            end = pos + n
-            if end > len(data):
-                raise EOFError("truncated bytes")
-            raw = data[pos:end]
-            return (raw.decode("utf-8") if _s else raw), end
+# one block may hold at most this many values that occupy no bytes
+_MAX_ZERO_WIDTH = 1 << 20
 
-        return c_bytes
-    if t == "record":
-        fields: list = []  # filled after registration: late binding
+_PRIMITIVES = frozenset(
+    ("null", "boolean", "int", "long", "float", "double", "bytes",
+     "string")
+)
+_COMPLEX = frozenset(("record", "enum", "fixed", "array", "map"))
 
-        def c_record(data, pos, _f=fields):
-            out = {}
-            for name, fn in _f:
-                out[name], pos = fn(data, pos)
-            return out, pos
 
-        _register_compiled(schema, c_record, names)
-        fields.extend(
-            (f["name"], _compile(f["type"], names))
-            for f in schema["fields"]
+class _Gen:
+    """Emits the source of ``_decode_block(data, n, append)``: decode
+    ``n`` records from ``data`` (one uncompressed block), ``append``
+    each and return the end position."""
+
+    def __init__(self) -> None:
+        self.lines: list[str] = []
+        self.names: dict[str, Any] = {}
+        self.consts: dict[str, Any] = {}
+        self.inlining: list[str] = []
+        self.n = 0
+
+    def var(self, prefix: str = "v") -> str:
+        self.n += 1
+        return f"{prefix}{self.n}"
+
+    def emit(self, ind: int, line: str) -> None:
+        self.lines.append("    " * ind + line)
+
+    def const(self, value: Any) -> str:
+        name = self.var("_k")
+        self.consts[name] = value
+        return name
+
+    # -- schema helpers -------------------------------------------------
+
+    def resolve(self, schema: Any) -> tuple[Any, str]:
+        """``(schema, type name)`` with named references resolved."""
+        if isinstance(schema, list):
+            return schema, "union"
+        if isinstance(schema, str):
+            if schema in _PRIMITIVES:
+                return schema, schema
+            if schema not in self.names:
+                raise NotImplementedError(
+                    f"Avro type {schema!r} beyond this reader"
+                )
+            schema = self.names[schema]
+        t = schema["type"]
+        if t in _PRIMITIVES or t in _COMPLEX:
+            return schema, t
+        return self.resolve(t)  # {"type": "<named type>"}
+
+    def register_all(self, schema: Any) -> None:
+        """Register every named definition up front, in document
+        order, so a reference resolves wherever it is first met."""
+        if isinstance(schema, list):
+            for b in schema:
+                self.register_all(b)
+        elif isinstance(schema, dict):
+            if schema.get("type") in ("record", "enum", "fixed"):
+                _register(schema, self.names)
+            for f in schema.get("fields") or ():
+                self.register_all(f["type"])
+            for key in ("items", "values"):
+                if key in schema:
+                    self.register_all(schema[key])
+
+    def enter(self, record: dict) -> None:
+        """Push a record being inlined (``inlining`` pops it); meeting
+        it again inside itself means a recursive type."""
+        name = record.get("name", "")
+        if name and name in self.inlining:
+            raise NotImplementedError(f"recursive Avro type {name!r}")
+        self.inlining.append(name)
+
+    def min_width(self, schema: Any) -> int:
+        """Fewest bytes one value can occupy (the block-count guard:
+        a corrupt count must fail fast, not spin)."""
+        schema, t = self.resolve(schema)
+        if t == "record":
+            self.enter(schema)
+            try:
+                return sum(self.min_width(f["type"])
+                           for f in schema["fields"])
+            finally:
+                self.inlining.pop()
+        return {"null": 0, "float": 4, "double": 8}.get(
+            t, int(schema["size"]) if t == "fixed" else 1
         )
-        return c_record
-    if t in ("array", "map"):
-        is_map = t == "map"
-        item = _compile(schema["values" if is_map else "items"], names)
 
-        def c_blocks(data, pos, _item=item, _m=is_map):
-            out = [] if not _m else {}
-            while True:
-                acc = 0
-                shift = 0
-                while True:
-                    byte = data[pos]
-                    pos += 1
-                    acc |= (byte & 0x7F) << shift
-                    if not byte & 0x80:
-                        break
-                    shift += 7
-                n = (acc >> 1) ^ -(acc & 1)
-                if n == 0:
-                    return out, pos
-                if n < 0:
-                    n = -n
-                    # skip the block byte size varint
-                    while data[pos] & 0x80:
-                        pos += 1
-                    pos += 1
-                for _ in range(n):
-                    if _m:
-                        acc = 0
-                        shift = 0
-                        while True:
-                            byte = data[pos]
-                            pos += 1
-                            acc |= (byte & 0x7F) << shift
-                            if not byte & 0x80:
-                                break
-                            shift += 7
-                        kl = (acc >> 1) ^ -(acc & 1)
-                        k = data[pos:pos + kl].decode("utf-8")
-                        pos += kl
-                        out[k], pos = _item(data, pos)
-                    else:
-                        v, pos = _item(data, pos)
-                        out.append(v)
+    # -- emitters -------------------------------------------------------
 
-        return c_blocks
-    if t == "fixed":
-        size = int(schema["size"])
+    def long(self, ind: int, target: str) -> None:
+        self.emit(ind, "b = data[pos]")
+        self.emit(ind, "if b < 128:")
+        self.emit(ind + 1, f"{target} = _ZZ[b]")
+        self.emit(ind + 1, "pos += 1")
+        self.emit(ind, "else:")
+        self.emit(ind + 1, f"{target}, pos = _varint(data, pos)")
 
-        def c_fixed(data, pos, _n=size):
-            return data[pos:pos + _n], pos + _n
+    def skip_long(self, ind: int) -> None:
+        self.emit(ind, "while data[pos] > 127:")
+        self.emit(ind + 1, "pos += 1")
+        self.emit(ind, "pos += 1")
 
-        _register_compiled(schema, c_fixed, names)
-        return c_fixed
-    if t == "enum":
-        symbols = list(schema["symbols"])
+    def length(self, ind: int, target: str) -> None:
+        self.long(ind, target)
+        self.emit(ind, f"if {target} < 0:")
+        self.emit(ind + 1, "raise ValueError('negative Avro length')")
 
-        def c_enum(data, pos, _s=symbols):
-            acc = 0
-            shift = 0
-            while True:
-                byte = data[pos]
-                pos += 1
-                acc |= (byte & 0x7F) << shift
-                if not byte & 0x80:
-                    break
-                shift += 7
-            return _s[(acc >> 1) ^ -(acc & 1)], pos
+    def blocks(self, ind: int, width: int, body, skip_sized: bool) -> None:
+        """Array/map block loop: count [byte size] items…, 0-ended;
+        ``body(ind)`` emits one item of at least ``width`` bytes.
+        Skipping jumps whole blocks whose count is negative (their
+        byte size follows)."""
+        c = self.var("c")
+        self.emit(ind, "while True:")
+        self.long(ind + 1, c)
+        self.emit(ind + 1, f"if not {c}:")
+        self.emit(ind + 2, "break")
+        self.emit(ind + 1, f"if {c} < 0:")
+        if skip_sized:
+            sz = self.var("z")
+            self.length(ind + 2, sz)
+            self.emit(ind + 2, f"pos += {sz}")
+            self.emit(ind + 2, "continue")
+        else:
+            self.emit(ind + 2, f"{c} = -{c}")
+            self.skip_long(ind + 2)
+        self.count_guard(ind + 1, c, width, "len(data) - pos")
+        self.emit(ind + 1, f"for _ in range({c}):")
+        body(ind + 2)
 
-        _register_compiled(schema, c_enum, names)
-        return c_enum
-    raise NotImplementedError(f"Avro type {t!r} beyond this reader")
+    def count_guard(self, ind: int, count: str, width: int,
+                    room: str) -> None:
+        """A corrupt count must fail fast, not spin: ``count`` values
+        of ``width`` bytes each must fit in ``room``; zero-width values
+        (nulls, empty records) are capped at ``_MAX_ZERO_WIDTH``."""
+        if width:
+            self.emit(ind, f"if {count} * {width} > {room}:")
+            self.emit(ind + 1, "raise EOFError('truncated Avro block')")
+        else:
+            self.emit(ind, f"if {count} > {_MAX_ZERO_WIDTH}:")
+            self.emit(ind + 1, "raise ValueError('implausible Avro count')")
+
+    def union_dispatch(self, ind: int, branches: list, per_branch) -> None:
+        idx = self.var("u")
+        self.long(ind, idx)
+        for i, br in enumerate(branches):
+            self.emit(ind, f"{'if' if i == 0 else 'elif'} {idx} == {i}:")
+            per_branch(ind + 1, br)
+        self.emit(ind, "else:")
+        self.emit(ind + 1, "raise ValueError('Avro union index out of range')")
+
+    def decode(self, schema: Any, ind: int, target: str) -> None:
+        """Lines decoding one value of ``schema`` into ``target``."""
+        schema, t = self.resolve(schema)
+        if t == "null":
+            self.emit(ind, f"{target} = None")
+        elif t == "boolean":
+            self.emit(ind, f"{target} = data[pos] == 1")
+            self.emit(ind, "pos += 1")
+        elif t in ("int", "long"):
+            self.long(ind, target)
+        elif t in ("float", "double"):
+            fn, w = ("_f4", 4) if t == "float" else ("_f8", 8)
+            self.emit(ind, f"{target} = {fn}(data, pos)[0]")
+            self.emit(ind, f"pos += {w}")
+        elif t in ("bytes", "string"):
+            ln = self.var("n")
+            self.length(ind, ln)
+            tail = ".decode()" if t == "string" else ""
+            self.emit(ind, f"{target} = data[pos:pos + {ln}]{tail}")
+            self.emit(ind, f"pos += {ln}")
+        elif t == "fixed":
+            size = int(schema["size"])
+            self.emit(ind, f"{target} = data[pos:pos + {size}]")
+            self.emit(ind, f"pos += {size}")
+        elif t == "enum":
+            syms = tuple(schema["symbols"])
+            k = self.var("e")
+            self.long(ind, k)
+            self.emit(ind, f"if not 0 <= {k} < {len(syms)}:")
+            self.emit(ind + 1, "raise ValueError('Avro enum index out of range')")
+            self.emit(ind, f"{target} = {self.const(syms)}[{k}]")
+        elif t == "union":
+            def branch(i2, br):
+                self.decode(br, i2, target)
+
+            self.union_dispatch(ind, schema, branch)
+        elif t == "record":
+            self.enter(schema)
+            parts = []
+            for f in schema["fields"]:
+                fv = self.var()
+                self.decode(f["type"], ind, fv)
+                parts.append(f"{f['name']!r}: {fv}")
+            self.inlining.pop()
+            self.emit(ind, f"{target} = {{{', '.join(parts)}}}")
+        elif t == "array":
+            it = self.var("i")
+            self.emit(ind, f"{target} = []")
+
+            def body(i2):
+                self.decode(schema["items"], i2, it)
+                self.emit(i2, f"{target}.append({it})")
+
+            self.blocks(ind, self.min_width(schema["items"]), body,
+                        skip_sized=False)
+        elif t == "map":
+            key, val = self.var("k"), self.var("m")
+            self.emit(ind, f"{target} = {{}}")
+
+            def body(i2):
+                self.decode("string", i2, key)
+                self.decode(schema["values"], i2, val)
+                self.emit(i2, f"{target}[{key}] = {val}")
+
+            self.blocks(ind, 1 + self.min_width(schema["values"]), body,
+                        skip_sized=False)
+        else:
+            raise NotImplementedError(f"Avro type {t!r} beyond this reader")
+
+    def skip(self, schema: Any, ind: int) -> None:
+        """Lines advancing ``pos`` past one value, building nothing."""
+        schema, t = self.resolve(schema)
+        if t == "null":
+            return
+        if t == "boolean":
+            self.emit(ind, "pos += 1")
+        elif t in ("int", "long", "enum"):
+            self.skip_long(ind)
+        elif t in ("float", "double", "fixed"):
+            w = {"float": 4, "double": 8}.get(t) or int(schema["size"])
+            self.emit(ind, f"pos += {w}")
+        elif t in ("bytes", "string"):
+            ln = self.var("n")
+            self.length(ind, ln)
+            self.emit(ind, f"pos += {ln}")
+        elif t == "union":
+            def branch(i2, br):
+                before = len(self.lines)
+                self.skip(br, i2)
+                if len(self.lines) == before:
+                    self.emit(i2, "pass")
+
+            self.union_dispatch(ind, schema, branch)
+        elif t == "record":
+            self.enter(schema)
+            for f in schema["fields"]:
+                self.skip(f["type"], ind)
+            self.inlining.pop()
+        elif t in ("array", "map"):
+            item = schema["items" if t == "array" else "values"]
+
+            def body(i2):
+                before = len(self.lines)
+                if t == "map":
+                    self.skip("string", i2)
+                self.skip(item, i2)
+                if len(self.lines) == before:
+                    self.emit(i2, "pass")
+
+            self.blocks(ind, self.min_width(item) + (t == "map"), body,
+                        skip_sized=True)
+        else:
+            raise NotImplementedError(f"Avro type {t!r} beyond this reader")
+
+    def project(self, schema: Any, tree: dict, ind: int,
+                slots: dict) -> None:
+        """Lines decoding the ``tree`` paths of one value of ``schema``
+        into their slot variables and skipping everything else. A path
+        through an array collects one value per item into a list; a
+        path that leaves the schema (absent field, non-record value,
+        null union branch) reads None."""
+        schema, t = self.resolve(schema)
+        if t == "union":
+            def branch(i2, br):
+                self.project(br, tree, i2, slots)
+
+            self.union_dispatch(ind, schema, branch)
+            return
+        if t == "array":
+            outer = {k: slots[k] for k in self.leaf_keys(tree)}
+            inner = dict(slots)
+            for k, var in outer.items():
+                inner[k] = self.var("t")
+                self.emit(ind, f"{var} = []")
+
+            def body(i2):
+                self.project(schema["items"], tree, i2, inner)
+                for k, var in outer.items():
+                    self.emit(i2, f"{var}.append({inner[k]})")
+
+            self.blocks(ind, self.min_width(schema["items"]), body,
+                        skip_sized=False)
+            return
+        if t != "record":
+            self.skip(schema, ind)
+            self.none_all(tree, ind, slots)
+            return
+        self.enter(schema)
+        seen = set()
+        for f in schema["fields"]:
+            sub = tree.get(f["name"], False)
+            seen.add(f["name"])
+            if sub is False:
+                self.skip(f["type"], ind)
+            elif sub is None:
+                self.decode(f["type"], ind, slots[id(tree), f["name"]])
+            else:
+                self.project(f["type"], sub, ind, slots)
+        self.inlining.pop()
+        self.none_all(tree, ind, slots, seen)
+
+    def leaf_keys(self, tree: dict) -> list[tuple]:
+        out = []
+        for k, sub in tree.items():
+            if sub is None:
+                out.append((id(tree), k))
+            else:
+                out += self.leaf_keys(sub)
+        return out
+
+    def none_all(self, tree: dict, ind: int, slots: dict,
+                 keep: set = frozenset()) -> None:
+        for k, sub in tree.items():
+            if k in keep:
+                continue
+            if sub is None:
+                self.emit(ind, f"{slots[id(tree), k]} = None")
+            else:
+                self.none_all(sub, ind, slots)
 
 
-def _register_compiled(schema: dict, fn, names: dict[str, Any]) -> None:
-    if "name" in schema:
-        ns = schema.get("namespace")
-        full = f"{ns}.{schema['name']}" if ns else schema["name"]
-        names[full] = fn
-        names[schema["name"]] = fn
+# one-byte zigzag varints, the common case (statuses, lengths, keys)
+_ZZ = tuple((b >> 1) ^ -(b & 1) for b in range(128))
+_f4 = struct.Struct("<f").unpack_from
+_f8 = struct.Struct("<d").unpack_from
+
+_DECODERS: dict[tuple, Any] = {}
+
+
+def _normalize(project: Iterable) -> tuple[tuple[str, ...], ...]:
+    return tuple(
+        (p,) if isinstance(p, str) else tuple(p) for p in project
+    )
+
+
+def _block_decoder(schema_json: str, project: tuple | None):
+    """The generated ``_decode_block(data, n, append) -> end pos`` for
+    a writer schema and projection (None = full records as dicts);
+    compiled once per process and pair."""
+    key = (schema_json, project)
+    fn = _DECODERS.get(key)
+    if fn is not None:
+        return fn
+    schema = json.loads(schema_json)
+    g = _Gen()
+    g.register_all(schema)
+    g.emit(0, "def _decode_block(data, n, append):")
+    g.count_guard(1, "n", g.min_width(schema), "len(data)")
+    g.emit(1, "pos = 0")
+    g.emit(1, "for _ in range(n):")
+    as_dicts = project is None
+    if as_dicts:
+        top, t = g.resolve(schema)
+        if t == "record":
+            project = tuple((f["name"],) for f in top["fields"])
+        else:
+            g.decode(schema, 2, "rec")
+            g.emit(2, "append(rec)")
+    if project is not None:
+        tree: dict = {}
+        for path in project:
+            node = tree
+            for seg in path[:-1]:
+                node = node.setdefault(seg, {})
+                if node is None:
+                    raise ValueError(f"overlapping projection {path}")
+            if isinstance(node.get(path[-1]), dict):
+                raise ValueError(f"overlapping projection {path}")
+            node[path[-1]] = None
+        slots: dict = {}
+
+        def alloc(node: dict) -> None:
+            for k, sub in node.items():
+                if sub is None:
+                    slots[id(node), k] = g.var("s")
+                else:
+                    alloc(sub)
+
+        alloc(tree)
+        g.project(schema, tree, 2, slots)
+
+        def slot_of(path):
+            node = tree
+            for seg in path[:-1]:
+                node = node[seg]
+            return slots[id(node), path[-1]]
+
+        if as_dicts:
+            items = ", ".join(
+                f"{p[0]!r}: {slot_of(p)}" for p in project
+            )
+            g.emit(2, f"append({{{items}}})")
+        else:
+            items = "".join(f"{slot_of(p)}, " for p in project)
+            g.emit(2, f"append(({items}))")
+    g.emit(1, "return pos")
+    ns = {"_varint": _varint, "_ZZ": _ZZ, "_f4": _f4, "_f8": _f8,
+          **g.consts}
+    try:
+        code = compile("\n".join(g.lines), "<avro block decoder>", "exec")
+    except (SyntaxError, RecursionError) as e:  # nesting beyond CPython's
+        raise NotImplementedError(f"Avro schema too deep: {e}") from None
+    exec(code, ns)
+    fn = _DECODERS[key] = ns["_decode_block"]
+    return fn
+
+
+def _read_header(path: str, data: bytes) -> tuple[dict[str, bytes], bytes, int]:
+    """Container header: ``(metadata map, sync marker, first block
+    position)``."""
+    if data[:4] != _MAGIC:
+        raise ValueError(f"{path} is not an Avro container file")
+    meta: dict[str, bytes] = {}
+    try:
+        pos = 4
+        while True:
+            n, pos = _varint(data, pos)
+            if n == 0:
+                break
+            if n < 0:
+                n = -n
+                _size, pos = _varint(data, pos)
+            for _ in range(n):
+                kl, pos = _varint(data, pos)
+                k = data[pos:pos + kl].decode()
+                pos += kl
+                vl, pos = _varint(data, pos)
+                meta[k] = data[pos:pos + vl]
+                pos += vl
+    except IndexError:
+        raise EOFError(f"{path}: truncated Avro header") from None
+    sync = data[pos:pos + 16]
+    if len(sync) != 16:
+        raise EOFError(f"{path}: truncated Avro header")
+    return meta, sync, pos + 16
 
 
 def _zigzag(v: int) -> int:
@@ -442,54 +654,54 @@ def write_avro_file(
         fh.write(bytes(header) + bytes(body))
 
 
-def read_avro_file(
-    path: str, compiled: bool = True
-) -> list[dict[str, Any]]:
-    """All records of an Avro container file as plain dicts. The
-    default path compiles the writer schema into a closure tree once
-    per file (``_compile`` — ~3× faster at manifest-walk scale);
-    ``compiled=False`` runs the original interpreted decoder, kept as
-    the reference implementation the equality tests pin the fast path
-    against."""
+def read_avro_file(path: str, project: Iterable | None = None) -> list:
+    """All records of an Avro container file — plain dicts, or with
+    ``project`` (field paths: a top-level name, or a tuple of names
+    into nested records) one tuple per record holding just those
+    values in ``project`` order; a path absent from the writer schema
+    or crossing a null union branch reads None. Truncated input raises
+    ``EOFError``, corrupt input ``ValueError``."""
     with open(path, "rb") as fh:
         data = fh.read()
-    buf = io.BytesIO(data)
-    if buf.read(4) != _MAGIC:
-        raise ValueError(f"{path} is not an Avro container file")
-    meta_schema = {"type": "map", "values": "bytes"}
-    meta = _decode(meta_schema, buf, {})
-    sync = buf.read(16)
-    schema = json.loads(meta["avro.schema"].decode("utf-8"))
-    codec = meta.get("avro.codec", b"null").decode("utf-8")
+    meta, sync, pos = _read_header(path, data)
+    codec = meta.get("avro.codec", b"null").decode()
     if codec not in ("null", "deflate"):
         raise NotImplementedError(f"Avro codec {codec!r}; null/deflate only")
-    names: dict[str, Any] = {}
-    out: list[dict[str, Any]] = []
-    fast = _compile(schema, {}) if compiled else None
-    while buf.tell() < len(data):
-        n_records = _read_long(buf)
-        block = _read_bytes(buf)
+    decode = _block_decoder(
+        meta["avro.schema"].decode(),
+        None if project is None else _normalize(project),
+    )
+    out: list = []
+    append = out.append
+    while pos < len(data):
+        try:
+            n, pos = _varint(data, pos)
+            size, pos = _varint(data, pos)
+        except IndexError:
+            raise EOFError(f"{path}: truncated block header") from None
+        if n < 0 or size < 0:
+            raise ValueError(f"{path}: negative block count or size")
+        block = data[pos:pos + size]
+        if len(block) != size:
+            raise EOFError(f"{path}: truncated record block")
+        pos += size
         if codec == "deflate":
-            block = zlib.decompress(block, -15)  # raw deflate per spec
-        if fast is not None:
-            pos = 0
             try:
-                for _ in range(n_records):
-                    rec, pos = fast(block, pos)
-                    out.append(rec)
-            except IndexError:
-                raise EOFError(
-                    f"{path}: truncated record block"
-                ) from None
-            if pos != len(block):
-                raise ValueError(
-                    f"{path}: {len(block) - pos} undecoded bytes in a "
-                    "record block"
-                )
-        else:
-            bbuf = io.BytesIO(block)
-            for _ in range(n_records):
-                out.append(_decode(schema, bbuf, names))
-        if buf.read(16) != sync:
+                block = zlib.decompress(block, -15)  # raw deflate per spec
+            except zlib.error as e:
+                raise ValueError(f"{path}: corrupt deflate block: {e}") from None
+        try:
+            end = decode(block, n, append)
+        except (IndexError, struct.error):
+            raise EOFError(f"{path}: truncated record block") from None
+        if end > len(block):
+            raise EOFError(f"{path}: truncated record block")
+        if end < len(block):
+            raise ValueError(
+                f"{path}: {len(block) - end} undecoded bytes in a "
+                "record block"
+            )
+        if data[pos:pos + 16] != sync:
             raise ValueError(f"{path}: sync marker mismatch")
+        pos += 16
     return out

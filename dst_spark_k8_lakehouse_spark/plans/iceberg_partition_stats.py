@@ -32,6 +32,7 @@ from typing import Any
 from pyspark.sql import SparkSession
 
 from dst_spark_k8_lakehouse_spark.plans import iceberg_reader
+from dst_spark_k8_lakehouse_spark.plans.gc_pause import paused_gc
 
 
 def _unified_fields(meta: dict[str, Any]) -> list[dict[str, Any]]:
@@ -58,24 +59,31 @@ def _manifest_partials(
     pos_del_files, eq_del_records, eq_del_files]}``. Runs inside the
     fork pool (module-level, plain-data args), so a wide-table stats
     build parallelizes the AGGREGATION too, not just the Avro decode
-    — only small partial dicts cross the IPC boundary."""
-    from dst_spark_k8_lakehouse_spark.plans import (
-        avro_codec,
-        iceberg_reader,
-    )
+    — only small partial dicts cross the IPC boundary. The decode
+    projects just the counted fields and the partition values of the
+    manifest's own spec; unified fields that spec lacks read None."""
+    from dst_spark_k8_lakehouse_spark.plans import avro_codec
 
+    here = {f["name"] for f in fields_here}
+    key_names = [nm for nm in names if nm in here]
+    rows = avro_codec.read_avro_file(
+        path,
+        project=(
+            "status",
+            ("data_file", "content"),
+            ("data_file", "record_count"),
+            ("data_file", "file_size_in_bytes"),
+        ) + tuple(("data_file", "partition", nm) for nm in key_names),
+    )
+    # a unified-tuple key from the projected values, in ``names`` order
+    slot = {nm: i for i, nm in enumerate(key_names)}
+    order = [slot.get(nm) for nm in names]
     partials: dict[tuple, list[int]] = {}
-    for entry in avro_codec.read_avro_file(path):
-        if int(str(entry.get("status"))) == 2:  # DELETED
+    for status, content, n, size, *pvs in rows:
+        if status == 2:  # DELETED
             continue
-        data_file = entry["data_file"]
-        pv = iceberg_reader._partition_values(data_file, fields_here)
-        content = int(
-            str(iceberg_reader._get(data_file, "content") or ml_content)
-        )
-        n = int(str(data_file.get("record_count")))
-        size = int(str(data_file.get("file_size_in_bytes")))
-        key = tuple(pv.get(nm) for nm in names)
+        content = content or ml_content
+        key = tuple(None if i is None else pvs[i] for i in order)
         c = partials.setdefault(key, [0, 0, 0, 0, 0, 0, 0])
         if content == 0:
             c[0] += n
@@ -90,6 +98,7 @@ def _manifest_partials(
     return partials
 
 
+@paused_gc
 def compute_partition_stats(
     spark: SparkSession, table: str, snapshot_id: int | None = None
 ) -> list[dict[str, Any]]:

@@ -48,8 +48,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from dst_spark_k8_lakehouse_spark.plans.gc_pause import paused_gc
+
 
 def _strip_uri(p: str) -> str:
+    if not p.startswith("file:"):
+        return p
     return re.sub(r"^file:(//)?", "", p)
 
 
@@ -172,17 +176,14 @@ def _snapshot_entries(
     summaries (foreign/pre-r8 writers) and delete manifests are always
     decoded.
 
-    The manifests that DO survive decode on a worker pool
-    (``plans/decode_pool`` — the pyarrow-free analogue of real
-    Iceberg's ManifestGroup executor service) in manifest-list order,
-    so a wide query's plan time divides by the pool width instead of
-    walking thousands of manifests single-threaded."""
+    The surviving manifests decode in-process, each entry once,
+    through a projection of just the fields the planner reads
+    (``_ENTRY_FIELDS``). A fork pool buys nothing here: shipping the
+    entries back costs the parent an unpickle per entry, as much as
+    the decode it saves (measured in ``decode_pool``'s docstring)."""
     data: list[dict] = []
     pos_dels: list[dict] = []
     eq_dels: list[dict] = []
-    from dst_spark_k8_lakehouse_spark.plans import decode_pool
-
-    survivors: list[tuple[int, int, list[dict] | None, str]] = []
     for mf in _avro_records(spark, snapshot["manifest-list"]):
         ml_content = int(str(_get(mf, "content") or 0))
         ml_seq = int(str(_get(mf, "sequence_number") or 0))
@@ -197,75 +198,61 @@ def _snapshot_entries(
                 fields_here, summaries
             ):
                 continue  # whole manifest pruned, never opened
-        survivors.append((ml_content, ml_seq, fields_here,
-                          manifest_path))
-    # a plain-dict (or absent) partition filter ships to the workers
-    # so entry processing parallelizes AND pruned-out entries never
-    # pay the pickle trip home; a user callable can't cross a process
-    # boundary — decode remotely, filter here
-    filter_picklable = partition_filter is None or isinstance(
-        partition_filter, dict
-    )
-    if filter_picklable:
-        results = decode_pool.run_tasks(
-            _decode_and_process,
-            [(mp, c, s, f, partition_filter)
-             for c, s, f, mp in survivors],
-            [s[3] for s in survivors],
+        _process_entries(
+            manifest_path, ml_content, ml_seq, fields_here,
+            partition_filter, data, pos_dels, eq_dels,
         )
-    else:
-        decoded = decode_pool.decode_avro_files(
-            [s[3] for s in survivors]
-        )
-        results = [
-            _process_entries(entries, c, s, f, partition_filter)
-            for (c, s, f, _mp), entries in zip(survivors, decoded)
-        ]
-    for d, p, e in results:
-        data += d
-        pos_dels += p
-        eq_dels += e
     return data, pos_dels, eq_dels
 
 
-def _decode_and_process(
-    manifest_path: str, ml_content: int, ml_seq: int,
-    fields_here: list[dict] | None, partition_filter,
-) -> tuple[list[dict], list[dict], list[dict]]:
-    """Worker task: decode one manifest and reduce it to the planner's
-    entry triple — runs on the fork pool, so both the Avro decode and
-    the per-entry Python parallelize and only kept entries cross the
-    process boundary."""
-    from dst_spark_k8_lakehouse_spark.plans import avro_codec
-
-    return _process_entries(
-        avro_codec.read_avro_file(manifest_path),
-        ml_content, ml_seq, fields_here, partition_filter,
-    )
+# the manifest-entry fields the planner reads, in tuple order; the
+# partition values of the manifest's spec follow them (None where the
+# writer schema lacks a field — v1 manifests carry no sequence numbers
+# or content)
+_ENTRY_FIELDS = (
+    "status",
+    "sequence_number",
+    ("data_file", "content"),
+    ("data_file", "file_path"),
+    ("data_file", "file_format"),
+    ("data_file", "lower_bounds", "key"),
+    ("data_file", "lower_bounds", "value"),
+    ("data_file", "upper_bounds", "key"),
+    ("data_file", "upper_bounds", "value"),
+    ("data_file", "equality_ids"),
+    ("data_file", "referenced_data_file"),
+    ("data_file", "content_offset"),
+    ("data_file", "content_size_in_bytes"),
+)
 
 
 def _process_entries(
-    entries, ml_content: int, ml_seq: int,
+    manifest_path: str, ml_content: int, ml_seq: int,
     fields_here: list[dict] | None, partition_filter,
-) -> tuple[list[dict], list[dict], list[dict]]:
-    data: list[dict] = []
-    pos_dels: list[dict] = []
-    eq_dels: list[dict] = []
-    for entry in entries:
-        status = int(str(entry.get("status")))
+    data: list[dict], pos_dels: list[dict], eq_dels: list[dict],
+) -> None:
+    """Decode one manifest and append its live entries to the
+    planner's three entry lists."""
+    from dst_spark_k8_lakehouse_spark.plans import avro_codec
+
+    pv_names = [sf["name"] for sf in fields_here or []]
+    rows = avro_codec.read_avro_file(
+        manifest_path,
+        project=_ENTRY_FIELDS
+        + tuple(("data_file", "partition", n) for n in pv_names),
+    )
+    for (status, e_seq, df_content, file_path, fmt, lo_keys, lo_vals,
+         hi_keys, hi_vals, ids, ref, offset, size, *pvs) in rows:
         if status == 2:  # DELETED
             continue
-        e_seq = _get(entry, "sequence_number")
-        seq = int(str(e_seq)) if e_seq is not None else ml_seq
-        data_file = entry.get("data_file")
-        fmt = str(data_file.get("file_format")).upper()
-        path = _strip_uri(str(data_file.get("file_path")))
-        df_content = int(str(_get(data_file, "content") or ml_content))
+        seq = e_seq if e_seq is not None else ml_seq
+        fmt = str(fmt).upper()
+        path = _strip_uri(str(file_path))
+        df_content = df_content or ml_content
         if fmt == "PUFFIN" and df_content == 1:
             # v3 DELETION VECTOR: one data file's position deletes as
             # a roaring blob inside a Puffin file (spec fields
             # 143-145 name the target and the blob span)
-            ref = _get(data_file, "referenced_data_file")
             if not ref:
                 raise ValueError(
                     f"PUFFIN delete entry {path} lacks "
@@ -277,10 +264,8 @@ def _process_entries(
                     "seq": seq,
                     "format": "PUFFIN",
                     "referenced": _strip_uri(str(ref)),
-                    "offset": int(str(_get(data_file, "content_offset"))),
-                    "size": int(
-                        str(_get(data_file, "content_size_in_bytes"))
-                    ),
+                    "offset": int(str(offset)),
+                    "size": int(str(size)),
                 }
             )
             continue
@@ -289,25 +274,22 @@ def _process_entries(
                 f"Iceberg data/delete file format {fmt}; parquet only"
             )
         if df_content == 0:
-            pv = _partition_values(data_file, fields_here or [])
+            pv = dict(zip(pv_names, pvs))
             if partition_filter is not None and not _pv_pass(
                 pv, partition_filter
             ):
                 continue
-            lb = _get(data_file, "lower_bounds")
-            ub = _get(data_file, "upper_bounds")
             bounds = None
-            if lb and ub:
-                lo_by = {
-                    int(x["key"]): bytes(x["value"]) for x in lb
-                }
-                hi_by = {
-                    int(x["key"]): bytes(x["value"]) for x in ub
-                }
-                bounds = {
-                    fid: (lo_by[fid], hi_by[fid])
-                    for fid in lo_by if fid in hi_by
-                }
+            if lo_keys and hi_keys:
+                if lo_keys == hi_keys:  # the usual shape: one zip
+                    bounds = dict(zip(lo_keys, zip(lo_vals, hi_vals)))
+                else:
+                    hi_by = dict(zip(hi_keys, hi_vals))
+                    bounds = {
+                        k: (v, hi_by[k])
+                        for k, v in dict(zip(lo_keys, lo_vals)).items()
+                        if k in hi_by
+                    }
             data.append(
                 {"path": path, "seq": seq, "pv": pv,
                  "bounds": bounds}
@@ -315,7 +297,6 @@ def _process_entries(
         elif df_content == 1:
             pos_dels.append({"path": path, "seq": seq})
         elif df_content == 2:
-            ids = _get(data_file, "equality_ids")
             if not ids:
                 raise ValueError(
                     f"equality delete file {path} carries no "
@@ -325,16 +306,13 @@ def _process_entries(
                 {
                     "path": path,
                     "seq": seq,
-                    "equality_ids": tuple(
-                        sorted(int(str(i)) for i in ids)
-                    ),
+                    "equality_ids": tuple(sorted(ids)),
                 }
             )
         else:
             raise NotImplementedError(
                 f"Iceberg file content {df_content} (0/1/2 only)"
             )
-    return data, pos_dels, eq_dels
 
 
 def _bound_literal(v: Any, iceberg_type: str) -> Any:
@@ -808,6 +786,7 @@ def snapshot_at_timestamp(path: str, ts_ms: int) -> int:
     return chosen
 
 
+@paused_gc
 def plan_file_list(
     spark: SparkSession,
     path: str,
@@ -821,7 +800,10 @@ def plan_file_list(
     manifest-list partition summaries, decode the survivors, prune
     data files from partition records and column bounds — returning
     the entry lists ``read_iceberg`` scans WITHOUT building a
-    DataFrame or touching any data file. ``bench.py``'s PLANTIME
+    DataFrame or touching any data file. Predicates are validated
+    here, but their residual row filter is a Spark Column and is
+    built by ``read_iceberg``: planning makes no py4j call and
+    ``spark`` may be None. ``bench.py``'s PLANTIME
     tracker times exactly this function, so a regression in the
     pure-Python metadata walk (Avro bytes decoded per query) is
     visible per round as a function of manifest/file count."""
@@ -873,7 +855,6 @@ def plan_file_list(
                 _trn.to_pv_domain(w, rts.get(col, "")) for w in wants
             }
         partition_filter = pv_wants  # sets: _pv_pass uses them as-is
-    residual = None
     manifest_keep = None
     schema_now = None
     for s in meta.get("schemas", []):
@@ -913,7 +894,6 @@ def plan_file_list(
             partition_filter = lambda pv: (  # noqa: E731
                 _pv_pass(pv, explicit) and pv_pred(pv)
             )
-        residual = _tr.predicates_to_column(list(predicates))
     snaps = {int(s["snapshot-id"]): s for s in meta.get("snapshots", [])}
     if timestamp_ms is not None:
         snapshot_id = snapshot_at_timestamp(path, timestamp_ms)
@@ -946,7 +926,7 @@ def plan_file_list(
         ]
     return {
         "data": data, "pos_dels": pos_dels, "eq_dels": eq_dels,
-        "schema": schema, "residual": residual, "meta": meta,
+        "schema": schema, "meta": meta,
     }
 
 
@@ -989,7 +969,7 @@ def read_iceberg(
     data, pos_dels, eq_dels = (
         plan["data"], plan["pos_dels"], plan["eq_dels"]
     )
-    schema, residual = plan["schema"], plan["residual"]
+    schema = plan["schema"]
     files = [e["path"] for e in data]
     if schema is not None:
         df = read_data_files(spark, files, schema)
@@ -999,8 +979,12 @@ def read_iceberg(
         df = spark.read.parquet(*files)
     if files and (pos_dels or eq_dels):
         df = _apply_deletes(spark, df, data, pos_dels, eq_dels, schema)
-    if residual is not None:
-        df = df.where(residual)
+    if predicates:
+        from dst_spark_k8_lakehouse_spark.plans import (
+            iceberg_transforms as _tr,
+        )
+
+        df = df.where(_tr.predicates_to_column(list(predicates)))
     return df
 
 

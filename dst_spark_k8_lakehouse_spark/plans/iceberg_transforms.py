@@ -422,6 +422,15 @@ def py_transform(
 _OPS = {"==", "=", "<", "<=", ">", ">=", "in"}
 
 
+def check_ops(predicates: list[tuple[str, str, Any]]) -> None:
+    """Raise on an op ``predicates_to_column`` cannot build — the
+    planners validate here so a bad predicate fails at plan time,
+    while the residual Column itself is built only by the readers."""
+    for _col, op, _lit in predicates:
+        if op not in _OPS:
+            raise ValueError(f"predicate op {op!r}; one of {sorted(_OPS)}")
+
+
 def _minus_unit(lit: Any, src_type: str = "") -> Any:
     """``lit`` minus one smallest unit of the SOURCE COLUMN's type —
     what a strict ``<`` bound projects through; None when the type has
@@ -495,9 +504,8 @@ def _compile_checks(
     / ``in`` / ``ge`` / ``le``."""
     by_id = {f["id"]: f for f in schema_fields}
     checks: list[tuple[str, str, Any]] = []
+    check_ops(predicates)
     for col, op, lit in predicates:
-        if op not in _OPS:
-            raise ValueError(f"predicate op {op!r}; one of {sorted(_OPS)}")
         for sf in spec_fields:
             src = by_id[sf["source-id"]]
             if src["name"] != col:

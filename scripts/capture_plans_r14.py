@@ -7,6 +7,7 @@ Usage: python scripts/capture_plans_r14.py before|after [qid ...]
 """
 from __future__ import annotations
 
+import os
 import sys
 from pathlib import Path
 
@@ -25,36 +26,43 @@ DEFAULT_IDS = [
 ]
 
 
+def formatted_plan(df) -> str:
+    """``df.explain('formatted')`` as a string."""
+    spark = df.sparkSession
+    return df._jdf.queryExecution().explainString(
+        spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
+            "formatted"
+        )
+    )
+
+
 def main() -> None:
+    if len(sys.argv) < 2 or sys.argv[1] not in ("before", "after"):
+        sys.exit(__doc__)
     tag = sys.argv[1]
     ids = sys.argv[2:] or DEFAULT_IDS
+    # the same SF directory and shuffle-partition rule as bench.py
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", SF_DIR)
+    sf = float(Path(sf_dir).name.removeprefix("sf") or "0.1")
     registry.load_all()
     spark = get_session(app_name="dst-plan-capture")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    cache_tables(spark, SF_DIR)
+    spark.conf.set(
+        "spark.sql.shuffle.partitions", str(int(max(8, min(32, 32 * sf))))
+    )
+    cache_tables(spark, sf_dir)
     out = Path(__file__).resolve().parents[1] / "plans" / "r14"
     out.mkdir(parents=True, exist_ok=True)
     for qid in ids:
-        df = registry.QUERIES[qid](spark, SF_DIR)
-        plan = df._jdf.queryExecution().explainString(
-            spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-                "formatted"
-            )
-        )
+        plan = formatted_plan(registry.QUERIES[qid](spark, sf_dir))
         (out / f"{qid}_{tag}.txt").write_text(plan)
         print(f"wrote {qid}_{tag}.txt ({len(plan)} bytes)")
     # the signature stage in isolation (the size-switch small branch)
     from dst_spark_k8_lakehouse_spark.llm import dedup
     from dst_spark_k8_lakehouse_spark.sources.catalog import load_table
 
-    docs = dedup.with_planted_duplicates(load_table(spark, SF_DIR, "documents"))
-    sig = dedup.signature_table(docs)
-    plan = sig._jdf.queryExecution().explainString(
-        spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-            "formatted"
-        )
-    )
+    docs = dedup.with_planted_duplicates(load_table(spark, sf_dir, "documents"))
+    plan = formatted_plan(dedup.signature_table(docs))
     (out / f"l2_minhash_sig_stage_{tag}.txt").write_text(plan)
     print(f"wrote l2_minhash_sig_stage_{tag}.txt")
 

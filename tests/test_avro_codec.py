@@ -11,6 +11,7 @@ import os
 import pytest
 
 from dst_spark_k8_lakehouse_spark.plans import avro_codec
+from tests import avro_reference as ref
 
 SCHEMA = {
     "type": "record",
@@ -229,16 +230,11 @@ def test_property_roundtrip_random_records(tmp_path):
 
 
 def test_compiled_decoder_equals_interpreted(tmp_path):
-    """The compiled closure-tree decoder (r8 fast path) and the
-    interpreted reference produce IDENTICAL output on every shape the
-    Iceberg metadata surface uses — unions, nested records, bounds
+    """The generated block decoder and the interpreted reference
+    (``tests/avro_reference``) produce IDENTICAL output on every shape
+    the Iceberg metadata surface uses — unions, nested records, bounds
     maps (negative skippable block counts included), arrays, fixed,
     enum, both codecs."""
-    import json
-    import zlib
-
-    from dst_spark_k8_lakehouse_spark.plans import avro_codec as ac
-
     schema = json.dumps({
         "type": "record", "name": "r",
         "fields": [
@@ -265,43 +261,19 @@ def test_compiled_decoder_equals_interpreted(tmp_path):
         for i in range(500)
     ]
     p = str(tmp_path / "t.avro")
-    ac.write_avro_file(p, schema, rows)
-    fast = ac.read_avro_file(p, compiled=True)
-    slow = ac.read_avro_file(p, compiled=False)
-    assert fast == slow == rows
-    # deflate blocks run through the same fast path
-    raw = open(p, "rb").read()
-    # rewrite with deflate by hand: decode then re-encode via writer?
-    # simpler: flip the codec by writing a deflate container directly
-    import io
-    buf = io.BytesIO(raw)
-    assert buf.read(4) == b"Obj\x01"
-    meta = ac._decode({"type": "map", "values": "bytes"}, buf, {})
-    sync = buf.read(16)
-    n = ac._read_long(buf)
-    block = ac._read_bytes(buf)
-    out = bytearray()
-    out += b"Obj\x01"
-    meta["avro.codec"] = b"deflate"
-    ac._encode({"type": "map", "values": "bytes"}, meta, out, {})
-    out += sync
-    co = zlib.compressobj(wbits=-15)
-    dblock = co.compress(bytes(block)) + co.flush()
-    ac._put_long(out, n)
-    ac._put_bytes(out, dblock)
-    out += sync
-    p2 = str(tmp_path / "t2.avro")
-    open(p2, "wb").write(bytes(out))
-    assert ac.read_avro_file(p2, compiled=True) == rows
+    avro_codec.write_avro_file(p, schema, rows)
+    assert avro_codec.read_avro_file(p) == ref.read_records(p) == rows
+    for codec, negative in (("deflate", False), ("null", True),
+                            ("deflate", True)):
+        p2 = str(tmp_path / f"t-{codec}-{negative}.avro")
+        ref.write_container(p2, schema, rows, codec=codec, per_block=128,
+                            negative_blocks=negative)
+        assert avro_codec.read_avro_file(p2) == ref.read_records(p2) == rows
 
 
 def test_compiled_decoder_edge_values(tmp_path):
-    """Varint edges through the compiled path: int64 extremes, zero,
-    alternating signs, empty strings/bytes/arrays/maps."""
-    import json
-
-    from dst_spark_k8_lakehouse_spark.plans import avro_codec as ac
-
+    """Varint edges through the generated decoder: int64 extremes,
+    zero, alternating signs, empty strings/bytes/arrays/maps."""
     schema = json.dumps({
         "type": "record", "name": "e",
         "fields": [
@@ -318,6 +290,300 @@ def test_compiled_decoder_edge_values(tmp_path):
         {"v": v, "s": "", "b": b"", "a": edge, "m": {}} for v in edge
     ]
     p = str(tmp_path / "e.avro")
-    ac.write_avro_file(p, schema, rows)
-    assert ac.read_avro_file(p, compiled=True) == rows
-    assert ac.read_avro_file(p, compiled=False) == rows
+    avro_codec.write_avro_file(p, schema, rows)
+    assert avro_codec.read_avro_file(p) == rows
+    assert ref.read_records(p) == rows
+    assert avro_codec.read_avro_file(p, project=["v", "a"]) == [
+        (r["v"], r["a"]) for r in rows
+    ]
+
+
+def test_projection_paths(tmp_path):
+    """Projected tuples: nested record paths, paths mapped over an
+    array of records, and paths the writer schema lacks (None)."""
+    p = str(tmp_path / "p.avro")
+    rows = [
+        {"i": i, "l": i, "f": 0.5, "d": 0.25, "b": True, "s": f"s{i}",
+         "by": b"x", "u": None if i % 2 else i, "arr": [1],
+         "m": {"k": "v"}, "fx": b"abcd", "e": "RED",
+         "nested": {"x": i * 7}, "again": {"x": i * 11}}
+        for i in range(5)
+    ]
+    avro_codec.write_avro_file(p, json.dumps(SCHEMA), rows)
+    got = avro_codec.read_avro_file(
+        p, project=[("nested", "x"), "s", ("again", "x"), "u",
+                    ("absent",), ("nested", "absent"), ("m", "k"),
+                    ("by", "deeper")],
+    )
+    assert got == [
+        (i * 7, f"s{i}", i * 11, None if i % 2 else i, None, None, None,
+         None)
+        for i in range(5)
+    ]
+    bounds = json.dumps({
+        "type": "record", "name": "b",
+        "fields": [{"name": "lb", "type": ["null", {
+            "type": "array", "items": {
+                "type": "record", "name": "kv", "fields": [
+                    {"name": "key", "type": "int"},
+                    {"name": "value", "type": "bytes"}]}}]}],
+    })
+    q = str(tmp_path / "b.avro")
+    avro_codec.write_avro_file(q, bounds, [
+        {"lb": [{"key": 1, "value": b"a"}, {"key": 2, "value": b"b"}]},
+        {"lb": None},
+        {"lb": []},
+    ])
+    assert avro_codec.read_avro_file(
+        q, project=[("lb", "key"), ("lb", "value")]
+    ) == [([1, 2], [b"a", b"b"]), (None, None), ([], [])]
+    with pytest.raises(ValueError, match="overlapping"):
+        avro_codec.read_avro_file(q, project=["lb", ("lb", "key")])
+
+
+def test_decoders_cached_per_schema_and_projection(tmp_path):
+    """Manifests sharing a writer schema share one generated decoder:
+    reading another file of the same schema compiles nothing."""
+    paths = []
+    for k in range(3):
+        p = str(tmp_path / f"c{k}.avro")
+        avro_codec.write_avro_file(p, json.dumps(SCHEMA), [])
+        paths.append(p)
+    avro_codec.read_avro_file(paths[0])
+    avro_codec.read_avro_file(paths[0], project=["s"])
+    before = dict(avro_codec._DECODERS)
+    for p in paths[1:]:
+        avro_codec.read_avro_file(p)
+        avro_codec.read_avro_file(p, project=["s"])
+    assert avro_codec._DECODERS == before
+
+
+# ---------------------------------------------------------------------------
+# property: generated decoders == the interpreted reference over random
+# schemas, and damaged files fail with EOFError / ValueError
+
+
+def _schemas_and_values():
+    """(schema, records, projection paths) over random schemas of
+    bounded depth: nested records, ``["null", X]`` and multi-branch
+    unions, arrays and maps, fixed, enum, float, double and named-type
+    references."""
+    from hypothesis import strategies as st
+
+    longs = st.integers(min_value=-(2**63), max_value=2**63 - 1)
+    prim_values = {
+        "null": st.none(),
+        "boolean": st.booleans(),
+        "int": st.integers(min_value=-(2**31), max_value=2**31 - 1),
+        "long": longs,
+        "float": st.floats(width=32, allow_nan=False),
+        "double": st.floats(allow_nan=False),
+        "bytes": st.binary(max_size=6),
+        "string": st.text(max_size=6),
+    }
+
+    @st.composite
+    def build(draw):
+        counter = [0]
+        named: list[tuple[str, dict]] = []
+
+        def fresh(prefix):
+            counter[0] += 1
+            return f"{prefix}{counter[0]}"
+
+        def typ(depth, in_union=False):
+            kinds = ["prim", "fixed", "enum"]
+            if named and not in_union:
+                kinds.append("ref")
+            if depth > 0:
+                kinds += ["record", "array", "map"]
+                if not in_union:
+                    kinds += ["union", "union"]
+            kind = draw(st.sampled_from(kinds))
+            if kind == "prim":
+                p = draw(st.sampled_from(sorted(prim_values)))
+                if in_union and p == "null":
+                    p = "long"
+                return p, prim_values[p]
+            if kind == "fixed":
+                n = draw(st.integers(min_value=0, max_value=4))
+                s = {"type": "fixed", "name": fresh("fx"), "size": n}
+                v = st.binary(min_size=n, max_size=n)
+                named.append((s["name"], (s, v)))
+                return s, v
+            if kind == "enum":
+                syms = [f"S{i}" for i in range(draw(
+                    st.integers(min_value=1, max_value=4)))]
+                s = {"type": "enum", "name": fresh("en"), "symbols": syms}
+                v = st.sampled_from(syms)
+                named.append((s["name"], (s, v)))
+                return s, v
+            if kind == "ref":
+                name, (s, v) = draw(st.sampled_from(named))
+                return name, v
+            if kind == "record":
+                fields, values = [], {}
+                for _ in range(draw(st.integers(min_value=1, max_value=4))):
+                    ft, fv = typ(depth - 1)
+                    f = fresh("f")
+                    fields.append({"name": f, "type": ft})
+                    values[f] = fv
+                s = {"type": "record", "name": fresh("r"),
+                     "fields": fields}
+                v = st.fixed_dictionaries(values)
+                named.append((s["name"], (s, v)))
+                return s, v
+            if kind == "array":
+                it, iv = typ(depth - 1)
+                return ({"type": "array", "items": it},
+                        st.lists(iv, max_size=4))
+            if kind == "map":
+                it, iv = typ(depth - 1)
+                return ({"type": "map", "values": it},
+                        st.dictionaries(st.text(max_size=4), iv,
+                                        max_size=3))
+            # union: ["null", X] or up to three branches, at most one
+            # of each container kind (the reference projection tells
+            # branches apart by decoded value)
+            branches, values, used = [], [], set()
+            if draw(st.booleans()):
+                branches.append("null")
+                values.append(st.none())
+            for _ in range(draw(st.integers(min_value=1, max_value=3))):
+                n_named = len(named)
+                bt, bv = typ(depth - 1, in_union=True)
+                key = (bt if isinstance(bt, str)  # no refs in unions
+                       else bt["type"] if bt["type"] == "array"
+                       else "dictlike" if bt["type"] in ("map", "record")
+                       else bt["name"])
+                if key in used:
+                    del named[n_named:]  # the branch is dropped
+                    continue
+                used.add(key)
+                branches.append(bt)
+                values.append(bv)
+            return branches, st.one_of(*[
+                vs.map(lambda x, i=i: ref.Branch(i, x))
+                for i, vs in enumerate(values)
+            ])
+
+        fields, values = [], {}
+        for _ in range(draw(st.integers(min_value=1, max_value=5))):
+            ft, fv = typ(2)
+            f = fresh("top")
+            fields.append({"name": f, "type": ft})
+            values[f] = fv
+        schema = {"type": "record", "name": "top", "fields": fields}
+        records = draw(st.lists(st.fixed_dictionaries(values), max_size=6))
+        # projection: random paths down the generated field names,
+        # including names that exist only elsewhere in the schema
+        all_names = [f"f{i}" for i in range(1, counter[0] + 1)] + [
+            f["name"] for f in fields
+        ]
+        paths = draw(st.lists(
+            st.lists(st.sampled_from(all_names), min_size=1, max_size=3)
+            .map(tuple),
+            min_size=1, max_size=4, unique=True,
+        ))
+        # overlapping paths (one a prefix of another) are rejected by
+        # design; keep the maximal ones
+        paths = [p for p in paths if not any(
+            q != p and q[:len(p)] == p for q in paths)]
+        return schema, records, paths
+
+    return build()
+
+
+def test_property_generated_decoder_equals_reference(tmp_path):
+    from hypothesis import HealthCheck, given, settings, strategies as st
+
+    @settings(max_examples=60, deadline=None,
+              suppress_health_check=[HealthCheck.function_scoped_fixture,
+                                     HealthCheck.too_slow])
+    @given(_schemas_and_values(), st.sampled_from(["null", "deflate"]),
+           st.booleans(), st.integers(min_value=1, max_value=4))
+    def check(case, codec, negative, per_block):
+        schema, records, paths = case
+        p = str(tmp_path / "prop.avro")
+        ref.write_container(p, json.dumps(schema), records, codec=codec,
+                            per_block=per_block, negative_blocks=negative)
+        want = ref.read_records(p)
+        assert avro_codec.read_avro_file(p) == want
+        got = avro_codec.read_avro_file(p, project=paths)
+        assert got == [
+            tuple(ref.value_at(schema, r, path, {}) for path in paths)
+            for r in want
+        ]
+
+    check()
+
+
+def _block_span(path: str) -> tuple[int, int]:
+    """Byte span of a single-block file's block (count, size, data,
+    sync)."""
+    import io
+
+    data = open(path, "rb").read()
+    buf = io.BytesIO(data)
+    ref.read_header(buf)
+    return buf.tell(), len(data)
+
+
+def test_property_damaged_files_raise(tmp_path):
+    from hypothesis import HealthCheck, given, settings, strategies as st
+
+    @settings(max_examples=60, deadline=None,
+              suppress_health_check=[HealthCheck.function_scoped_fixture,
+                                     HealthCheck.too_slow])
+    @given(_schemas_and_values(), st.sampled_from(["null", "deflate"]),
+           st.booleans(), st.data())
+    def check(case, codec, negative, data):
+        schema, records, _paths = case
+        if not records:
+            return
+        p = str(tmp_path / "dmg.avro")
+        ref.write_container(p, json.dumps(schema), records, codec=codec,
+                            per_block=len(records),
+                            negative_blocks=negative)
+        raw = open(p, "rb").read()
+        start, end = _block_span(p)
+        # truncation anywhere inside the only block
+        cut = data.draw(st.integers(min_value=start + 1,
+                                    max_value=end - 1))
+        open(p, "wb").write(raw[:cut])
+        with pytest.raises((EOFError, ValueError)):
+            avro_codec.read_avro_file(p)
+        # a flipped byte: either still decodes or fails as corrupt —
+        # never another error, never a hang
+        at = data.draw(st.integers(min_value=start, max_value=end - 1))
+        bit = data.draw(st.integers(min_value=0, max_value=7))
+        flipped = bytearray(raw)
+        flipped[at] ^= 1 << bit
+        open(p, "wb").write(bytes(flipped))
+        try:
+            avro_codec.read_avro_file(p)
+        except (EOFError, ValueError):
+            pass
+
+    check()
+
+
+def test_trailing_bytes_in_block_raise(tmp_path):
+    """A block with bytes past its last record is corrupt."""
+    p = str(tmp_path / "t.avro")
+    rows = [{"x": 1}, {"x": 2}]
+    sch = json.dumps({"type": "record", "name": "t",
+                      "fields": [{"name": "x", "type": "long"}]})
+    avro_codec.write_avro_file(p, sch, rows)
+    raw = open(p, "rb").read()
+    start, _end = _block_span(p)
+    sync = raw[-16:]
+    block = bytearray()
+    for r in rows:
+        avro_codec._encode(json.loads(sch), r, block, {})
+    body = bytearray()
+    avro_codec._put_long(body, 2)
+    avro_codec._put_bytes(body, bytes(block) + b"\x00")
+    open(p, "wb").write(raw[:start] + bytes(body) + sync)
+    with pytest.raises(ValueError, match="undecoded"):
+        avro_codec.read_avro_file(p)

@@ -33,6 +33,13 @@ def _write(tmp, k, n):
     return p, rows
 
 
+def _decode(paths):
+    """Whole record lists per file, through the pool when it pays."""
+    return decode_pool.run_tasks(
+        avro_codec.read_avro_file, [(p,) for p in paths], paths
+    )
+
+
 @pytest.fixture
 def pool_state():
     saved = (decode_pool._POOL, decode_pool._DISABLED,
@@ -51,7 +58,7 @@ def test_parallel_equals_sequential_in_order(tmp_path, pool_state):
     decode_pool.MIN_FILES = 2
     decode_pool.MIN_BYTES = 1  # force the pool on
     decode_pool._DISABLED = False
-    got = decode_pool.decode_avro_files(paths)
+    got = _decode(paths)
     assert not decode_pool._DISABLED, "pool fell back unexpectedly"
     assert got == expect  # values AND order
 
@@ -59,7 +66,7 @@ def test_parallel_equals_sequential_in_order(tmp_path, pool_state):
 def test_below_threshold_stays_in_process(tmp_path, pool_state):
     p, rows = _write(str(tmp_path), 0, 10)
     decode_pool.MIN_FILES = 99
-    assert decode_pool.decode_avro_files([p]) == [rows]
+    assert _decode([p]) == [rows]
 
 
 def test_worker_error_fails_open_and_reraises(tmp_path, pool_state):
@@ -71,7 +78,7 @@ def test_worker_error_fails_open_and_reraises(tmp_path, pool_state):
     decode_pool.MIN_BYTES = 1
     decode_pool._DISABLED = False
     with pytest.raises(Exception):
-        decode_pool.decode_avro_files([good, bad, good, good])
+        _decode([good, bad, good, good])
     # the sequential retry raised the same data error AND the pool is
     # out of the loop from now on
     assert decode_pool._DISABLED
@@ -79,7 +86,7 @@ def test_worker_error_fails_open_and_reraises(tmp_path, pool_state):
 
 def test_run_tasks_ships_processing(tmp_path, pool_state):
     # run_tasks executes an arbitrary module-level reducer on the pool
-    # (the shape iceberg_reader._decode_and_process uses)
+    # (the shape iceberg_partition_stats._manifest_partials uses)
     paths = [_write(str(tmp_path), k, 300)[0] for k in range(6)]
     decode_pool.MIN_FILES = 2
     decode_pool.MIN_BYTES = 1
@@ -132,3 +139,38 @@ def _hang_then_count(path):
     if decode_pool._POOL is not None or not decode_pool._DISABLED:
         _time.sleep(5)
     return sum(1 for _ in avro_codec.read_avro_file(path))
+
+
+def _gc_enabled(_path):
+    import gc
+
+    return gc.isenabled()
+
+
+def test_workers_collect_garbage_when_forked_under_paused_gc(
+    tmp_path, pool_state
+):
+    """A pool first forked inside a ``paused_gc`` planner call keeps
+    the cyclic collector ON in its long-lived workers, and the caller
+    gets the collector back afterwards."""
+    import gc
+
+    from dst_spark_k8_lakehouse_spark.plans.gc_pause import paused_gc
+
+    paths = [_write(str(tmp_path), k, 10)[0] for k in range(4)]
+    decode_pool._POOL = None  # fork a fresh pool (the fixture restores)
+    decode_pool.MIN_FILES = 2
+    decode_pool.MIN_BYTES = 1
+    decode_pool._DISABLED = False
+
+    @paused_gc
+    def probe():
+        assert not gc.isenabled()
+        return decode_pool.run_tasks(
+            _gc_enabled, [(p,) for p in paths], paths
+        )
+
+    assert probe() == [True] * 4
+    assert not decode_pool._DISABLED
+    assert gc.isenabled()
+    decode_pool._close_pool()

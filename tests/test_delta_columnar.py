@@ -1,5 +1,5 @@
 """Columnar-vs-dict planning equality pin (the mirror of
-``test_avro_codec``'s compiled-vs-interpreted pin).
+``test_avro_codec``'s generated-vs-reference decoder pin).
 
 ``delta_reader.plan_file_list`` has two resolutions of the same log:
 the classic per-add dict replay (``CP_COLUMNAR=False``) and the r9
