@@ -39,20 +39,6 @@ from dst_spark_k8_lakehouse_spark.registry import query
 from dst_spark_k8_lakehouse_spark.sources.catalog import load_table
 
 
-def _doc_grams(docs: DataFrame, n: int) -> DataFrame:
-    """(doc_id, gram) — distinct token n-grams per doc, map-only."""
-    tok = F.split(F.trim(F.lower("text")), r"\s+")
-    grams = F.expr(
-        f"transform(sequence(1, size(tok) - {n - 1}), "
-        f"i -> concat_ws(' ', slice(tok, i, {n})))"
-    )
-    return (
-        docs.withColumn("tok", tok)
-        .filter(F.size("tok") >= n)
-        .select("doc_id", F.explode(F.array_distinct(grams)).alias("gram"))
-    )
-
-
 def _doc_gram_hashes(docs: DataFrame, n: int) -> DataFrame:
     """(doc_id, gram_h) — distinct xxhash64 n-gram hashes per doc,
     map-only and string-free: tokens are hashed once, each gram hash

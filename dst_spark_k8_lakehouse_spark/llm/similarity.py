@@ -378,6 +378,21 @@ def build_ivf_index(
     return table
 
 
+def _open_ivf_index(spark: SparkSession, index_path: str):
+    """(table, rows, cell count) of an index ``build_ivf_index`` wrote;
+    the cell count comes from the newest commit that recorded one."""
+    from dst_spark_k8_lakehouse_spark.plans import VersionedTable
+
+    table = VersionedTable(spark, index_path)
+    n_cells = table.latest_prop("ivf_n_cells")
+    if n_cells is None:
+        raise ValueError(
+            f"no ivf_n_cells prop at {index_path} — not an IVF index "
+            "built by build_ivf_index"
+        )
+    return table, table.read(), n_cells
+
+
 def query_ivf_index(
     spark: SparkSession,
     index_path: str,
@@ -394,16 +409,7 @@ def query_ivf_index(
     desynchronize from the stored assignment and make cells
     unreachable. ``exclude_vec_id`` drops a known row (e.g. the query
     vector itself when it came from the corpus) BEFORE the top-k cut."""
-    from dst_spark_k8_lakehouse_spark.plans import VersionedTable
-
-    table = VersionedTable(spark, index_path)
-    n_cells = table.latest_prop("ivf_n_cells")
-    if n_cells is None:
-        raise ValueError(
-            f"no ivf_n_cells prop at {index_path} — not an IVF index "
-            "built by build_ivf_index"
-        )
-    index = table.read()
+    _table, index, n_cells = _open_ivf_index(spark, index_path)
     qv = F.array(*[F.lit(float(x)) for x in query_vec])
     cents = index.filter(F.col("vec_id") < n_cells).select(
         "cell", F.col("embedding").alias("cv")
@@ -677,17 +683,9 @@ def append_to_ivf_index(new_vectors: DataFrame, index_path: str):
     reused id would shadow a stored vector — so collisions raise
     (checked with one pushed-down id filter over the index; the id
     list is batch-sized by construction)."""
-    from dst_spark_k8_lakehouse_spark.plans import VersionedTable
-
-    spark = new_vectors.sparkSession
-    table = VersionedTable(spark, index_path)
-    n_cells = table.latest_prop("ivf_n_cells")
-    if n_cells is None:
-        raise ValueError(
-            f"no ivf_n_cells prop at {index_path} — not an IVF index "
-            "built by build_ivf_index"
-        )
-    index = table.read()
+    table, index, n_cells = _open_ivf_index(
+        new_vectors.sparkSession, index_path
+    )
     new_ids = [r.vec_id for r in new_vectors.select("vec_id").collect()]
     if index.filter(F.col("vec_id").isin(new_ids)).limit(1).count():
         raise ValueError(

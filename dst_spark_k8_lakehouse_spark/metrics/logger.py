@@ -10,19 +10,18 @@ dicts produced at driver rate, never executor data) and flush as ONE
 append per flush point — at 100 TB-pipeline cadence that is the
 difference between thousands of commits and a handful.
 
-Sink is pluggable: a ``VersionedTable`` (parquet, time-travellable —
-the default) or any ``DataFrame``-accepting callable (Delta writer on a
-cluster that ships the jars).
+The sink is a ``VersionedTable`` — a Delta table, like the
+reference's, and time-travellable: the first flush creates it, later
+ones append.
 """
 
 from __future__ import annotations
 
 import uuid
-from collections.abc import Callable
 from datetime import datetime, timezone
 from typing import Any
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 from pyspark.sql import types as T
 
 from dst_spark_k8_lakehouse_spark.plans.table import VersionedTable
@@ -88,29 +87,11 @@ def build_record(
 
 
 class MetricsLogger:
-    """Buffered metrics logger with a pluggable append sink."""
+    """Buffered metrics logger appending to the table at ``table_path``."""
 
-    def __init__(
-        self,
-        spark: SparkSession,
-        table_path: str | None = None,
-        sink: Callable[[DataFrame], None] | None = None,
-    ):
-        if (table_path is None) == (sink is None):
-            raise ValueError("exactly one of table_path / sink required")
+    def __init__(self, spark: SparkSession, table_path: str):
         self.spark = spark
-        if sink is None:
-            table = VersionedTable(spark, table_path)
-
-            def sink(df: DataFrame) -> None:
-                import os
-
-                if os.path.exists(table._manifest_path()):
-                    table.append(df)
-                else:
-                    table.create(df)
-
-        self._sink = sink
+        self._table = VersionedTable(spark, table_path)
         self._buffer: list[dict[str, Any]] = []
 
     def log_metric(self, **kwargs: Any) -> str:
@@ -128,8 +109,13 @@ class MetricsLogger:
         """Write all buffered events as ONE append; returns rows written."""
         if not self._buffer:
             return 0
+        from dst_spark_k8_lakehouse_spark.plans import delta_reader
+
         df = self.spark.createDataFrame(self._buffer, schema=METRICS_SCHEMA)
-        self._sink(df)
+        if delta_reader.is_delta_table(self._table.path):
+            self._table.append(df)
+        else:
+            self._table.create(df)
         n = len(self._buffer)
         self._buffer.clear()
         return n

@@ -2,9 +2,4 @@
 versioned writes, time travel."""
 
 from dst_spark_k8_lakehouse_spark.plans import ddl, dml, table  # noqa: F401
-from dst_spark_k8_lakehouse_spark.plans.delta_backend import (  # noqa: F401
-    DeltaBackedTable,
-    delta_available,
-    open_table,
-)
 from dst_spark_k8_lakehouse_spark.plans.table import VersionedTable  # noqa: F401

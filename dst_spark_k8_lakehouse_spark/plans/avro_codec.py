@@ -48,6 +48,24 @@ def _register(schema: dict, names: dict[str, Any]) -> None:
         names.setdefault(schema["name"], schema)
 
 
+def _register_all(schema: Any, names: dict[str, Any]) -> None:
+    """Register every named definition of ``schema`` up front, in
+    document order, so a reference resolves wherever it is first met
+    — also one whose definition sits in a union branch a value does
+    not take."""
+    if isinstance(schema, list):
+        for b in schema:
+            _register_all(b, names)
+    elif isinstance(schema, dict):
+        if schema.get("type") in ("record", "enum", "fixed"):
+            _register(schema, names)
+        for f in schema.get("fields") or ():
+            _register_all(f["type"], names)
+        for key in ("items", "values"):
+            if key in schema:
+                _register_all(schema[key], names)
+
+
 def _varint(data: bytes, pos: int) -> tuple[int, int]:
     """Zigzag varint at ``pos`` (Avro int/long share the encoding):
     ``(value, next pos)``. Generated decoders inline the one-byte case
@@ -119,21 +137,6 @@ class _Gen:
         if t in _PRIMITIVES or t in _COMPLEX:
             return schema, t
         return self.resolve(t)  # {"type": "<named type>"}
-
-    def register_all(self, schema: Any) -> None:
-        """Register every named definition up front, in document
-        order, so a reference resolves wherever it is first met."""
-        if isinstance(schema, list):
-            for b in schema:
-                self.register_all(b)
-        elif isinstance(schema, dict):
-            if schema.get("type") in ("record", "enum", "fixed"):
-                _register(schema, self.names)
-            for f in schema.get("fields") or ():
-                self.register_all(f["type"])
-            for key in ("items", "values"):
-                if key in schema:
-                    self.register_all(schema[key])
 
     def enter(self, record: dict) -> None:
         """Push a record being inlined (``inlining`` pops it); meeting
@@ -427,7 +430,7 @@ def _block_decoder(schema_json: str, project: tuple | None):
         return fn
     schema = json.loads(schema_json)
     g = _Gen()
-    g.register_all(schema)
+    _register_all(schema, g.names)
     g.emit(0, "def _decode_block(data, n, append):")
     g.count_guard(1, "n", g.min_width(schema), "len(data)")
     g.emit(1, "pos = 0")
@@ -581,7 +584,6 @@ def _encode(schema: Any, v: Any, out: bytearray,
         _put_bytes(out, str(v).encode("utf-8"))
         return
     if t == "record":
-        _register(schema, names)
         for f in schema["fields"]:
             if f["name"] not in v and "default" in f:
                 _encode(f["type"], f["default"], out, names)
@@ -606,14 +608,12 @@ def _encode(schema: Any, v: Any, out: bytearray,
         _put_long(out, 0)
         return
     if t == "fixed":
-        _register(schema, names)
         b = bytes(v)
         if len(b) != int(schema["size"]):
             raise ValueError(f"fixed size {len(b)} != {schema['size']}")
         out += b
         return
     if t == "enum":
-        _register(schema, names)
         _put_long(out, schema["symbols"].index(v))
         return
     raise NotImplementedError(f"Avro type {t!r} beyond this writer")
@@ -630,6 +630,7 @@ def write_avro_file(
 
     schema = json.loads(schema_json)
     names: dict[str, Any] = {}
+    _register_all(schema, names)
     header = bytearray()
     header += _MAGIC
     meta = {

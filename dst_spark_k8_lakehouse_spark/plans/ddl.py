@@ -7,9 +7,9 @@ wrapper so the capability surface is enumerable and testable.
 
 Statements whose reference form needs format jars (row-level DML, time
 travel, VACUUM, RENAME COLUMN) route to ``plans.table.VersionedTable``,
-which reproduces their semantics over plain parquet; with delta-spark
-installed (``session._lakehouse_extensions``) the same calls can target
-Delta tables unchanged.
+a handle over the jar-free Delta stack (``delta_writer`` /
+``delta_reader`` / ``delta_dml``): the tables it writes are Delta
+tables any Delta 3.x runtime reads.
 """
 
 from __future__ import annotations
@@ -160,7 +160,8 @@ def insert_overwrite(spark: SparkSession, name: str, select_sql: str) -> None:
     rejects an overwrite whose SELECT reads the target table
     (UNSUPPORTED_OVERWRITE — no snapshot isolation); Delta/Iceberg allow
     it. Self-referencing rewrites route through
-    ``VersionedTable.update``/``overwrite``, which snapshot first."""
+    ``VersionedTable.update``/``overwrite``, which read a committed
+    Delta version."""
     spark.sql(f"INSERT OVERWRITE TABLE {name} {select_sql}")
 
 

@@ -30,8 +30,9 @@ column still raises (it would move rows across files under a
 fixed-partition rewrite; route such changes through MERGE, which
 re-partitions).
 
-API mirrors ``VersionedTable.update/delete/merge`` (plans/table.py) so
-``plans/dml.execute_dml`` statement routing works on both backends.
+``plans.table.VersionedTable.update/delete/merge`` are thin calls
+into this module, and ``plans/dml.execute_native_sql`` routes the
+statement text here.
 """
 
 from __future__ import annotations
@@ -177,9 +178,11 @@ def _rewrite_and_commit(
     new_files: list[tuple[DataFrame, dict[str, str]]],
     operation: str,
     cdc_actions: list[dict[str, Any]] | None = None,
+    meta_action: dict[str, Any] | None = None,
 ) -> int:
     """Publish one commit: removes + adds from writing each (df,
-    partitionValues) group. Rewritten files of a partitioned table are
+    partitionValues) group, led by ``meta_action`` (a widened
+    ``metaData``) when given. Rewritten files of a partitioned table are
     placed back into their Hive partition directory so the reader's
     single-scan layout survives DML. A lost commit race retries at the
     next version IFF the table state is unchanged (anything else is a
@@ -196,7 +199,8 @@ def _rewrite_and_commit(
             "(deletion vectors keep ids stable — no file rewrites)"
         )
     now = int(time.time() * 1000)
-    actions: list[dict[str, Any]] = [
+    actions: list[dict[str, Any]] = [meta_action] if meta_action else []
+    actions += [
         {
             "remove": {
                 "path": rel,
@@ -226,15 +230,7 @@ def _rewrite_and_commit(
             _FILE_COL
         )
         adds = delta_writer._write_data_files(out, table)
-        prefix = "/".join(delta_writer._hive_seg_w(c, pv.get(c)) for c in part_cols)
-        for a in adds:
-            a["add"]["partitionValues"] = pv
-            if prefix:
-                rel = f"{prefix}/{a['add']['path']}"
-                dst = os.path.join(table, *rel.split("/"))
-                os.makedirs(os.path.dirname(dst), exist_ok=True)
-                os.replace(os.path.join(table, a["add"]["path"]), dst)
-                a["add"]["path"] = rel
+        delta_writer._place_in_partition(table, adds, part_cols, pv)
         actions += adds
     actions += cdc_actions or []
     actions.append(delta_writer._commit_info(operation))
@@ -389,6 +385,7 @@ def merge_delta(
     on: list[str],
     update_when_matched: bool = True,
     insert_when_not_matched: bool = True,
+    merge_schema: bool = False,
 ) -> int:
     """MERGE INTO a native Delta log (upsert, SURVEY §7.4 semantics —
     matched target rows replaced wholesale by source rows, unmatched
@@ -404,7 +401,11 @@ def merge_delta(
     partition group (like the reader's nonstandard-layout fallback:
     fine at the partition counts DML predicates touch; a 100k-
     partition MERGE should pre-filter the target by the source's
-    partition values first)."""
+    partition values first).
+
+    ``merge_schema=True`` (Delta's schema auto-merge) adds new source
+    columns to the schema in the MERGE's own commit and null-fills
+    missing ones; otherwise the source is projected onto the table."""
     state = delta_reader._replay(spark, table, None)
     _check_unmapped(state, "MERGE")
     from dst_spark_k8_lakehouse_spark.plans import delta_identity
@@ -419,7 +420,12 @@ def merge_delta(
         )
     schema = _schema(state)
     part_cols = state["metaData"].get("partitionColumns") or []
-    if source.columns != [f.name for f in schema.fields]:
+    meta_action = None
+    if merge_schema:
+        source, meta_action, _parts, _phys = delta_writer._reconcile_schema(
+            source, state["metaData"], merge_schema=True
+        )
+    elif source.columns != [f.name for f in schema.fields]:
         source = source.select(*[f.name for f in schema.fields])
     dup = source.groupBy(*on).count().where("count > 1").limit(1).count()
     if dup:
@@ -434,6 +440,7 @@ def merge_delta(
             [(source.withColumn(_FILE_COL, F.lit("")), insert_pv)],
             "MERGE",
             _cdc(state, [(source, "insert")], table),
+            meta_action,
         )
     scans = {
         pv_key: _scan_group(
@@ -500,5 +507,5 @@ def merge_delta(
         )
     cdc = _cdc(state, changes, table)
     return _rewrite_and_commit(
-        spark, table, state, removes, rewrites, "MERGE", cdc
+        spark, table, state, removes, rewrites, "MERGE", cdc, meta_action
     )

@@ -102,12 +102,6 @@ def dv_positions(table: str, descriptor: dict[str, Any]) -> list[int]:
     return positions
 
 
-def has_dvs(state: dict) -> bool:
-    return any(
-        a.get("deletionVector") for a in state["files"].values()
-    )
-
-
 def _protocol_action(state: dict) -> dict[str, Any] | None:
     """The protocol-upgrade action a DV commit needs, or None if the
     table already declares the feature. Existing implied features

@@ -40,8 +40,6 @@ import json
 import re
 from typing import Any, Callable
 
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 GENERATION_KEY = "delta.generationExpression"
 
@@ -55,19 +53,6 @@ def generation_exprs(meta: dict[str, Any]) -> dict[str, str]:
         if GENERATION_KEY in md:
             out[f["name"]] = str(md[GENERATION_KEY])
     return out
-
-
-def apply_generated(df: DataFrame, gen: dict[str, str],
-                    types: dict[str, Any]) -> DataFrame:
-    """Compute every generated column MISSING from ``df`` from its
-    expression (cast to the declared type) — what the spec requires a
-    writer to do when the column is not supplied."""
-    for col, expr in gen.items():
-        if col not in df.columns:
-            df = df.withColumn(
-                col, F.expr(expr).cast(types[col])
-            )
-    return df
 
 
 def validation_exprs(gen: dict[str, str],

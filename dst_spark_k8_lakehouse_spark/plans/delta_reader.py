@@ -1,13 +1,11 @@
 """Read-only Delta Lake table reader — pure Python over the PUBLIC
 Delta transaction-log protocol (no jars).
 
-The one gap the container forces (``delta-spark`` uninstallable, see
-``delta_backend.py``) splits in two: WRITING Delta needs the native
-commit protocol (jar), but READING only needs the documented log
-format (delta.io protocol spec, PROTOCOL.md: JSON commit files under
-``_delta_log/`` containing ``metaData`` / ``add`` / ``remove`` /
-``protocol`` actions, plus optional parquet checkpoints referenced by
-``_last_checkpoint``). A reference user pointing this engine at a
+READING needs only the documented log format, not the Delta runtime
+(``delta-spark``): delta.io protocol spec, PROTOCOL.md — JSON commit
+files under ``_delta_log/`` containing ``metaData`` / ``add`` /
+``remove`` / ``protocol`` actions, plus optional parquet checkpoints
+referenced by ``_last_checkpoint``. A reference user pointing this engine at a
 Delta table written by their existing Delta 3.x pipeline can SELECT
 from it — including time travel — with no Delta runtime:
 
@@ -39,8 +37,9 @@ from it — including time travel — with no Delta runtime:
   against ``delta.columnMapping.id`` (Spark's field-id resolution),
   with a loud guard when the files carry no ids.
 
-Write paths still raise toward ``VersionedTable`` / the jar-guarded
-backend; this module never mutates ``_delta_log``.
+This module never mutates ``_delta_log``; the jar-free write side is
+``delta_writer`` / ``delta_dml``, and ``plans.table.VersionedTable``
+is the handle over all three.
 
 DELETION VECTORS (the protocol's merge-on-read deletes, reader
 feature ``deletionVectors``) are applied: each vectored add's bitmap
@@ -374,7 +373,11 @@ def _replay(
         _flush_tail(state, buf)
     if version is not None:
         available = [v for v, _ in commits]
-        if not seen_any or (available and version < available[0] and start == 0):
+        if (
+            not seen_any
+            or state["version"] < version
+            or (available and version < available[0] and start == 0)
+        ):
             raise ValueError(
                 f"version {version} not available at {path} "
                 f"(commits: {available[:3]}…)"
@@ -1232,8 +1235,10 @@ def read_delta(
 
 def delta_history(path: str) -> list[dict[str, Any]]:
     """Commit metadata per version (from each commit's commitInfo
-    action when present), newest first — the read-only analogue of
-    DESCRIBE HISTORY."""
+    action when present: operation, timestamp — the in-commit
+    timestamp when the commit carries one, the timestamp that survives
+    storage migrations — and, when the writer set it,
+    ``userMetadata``), newest first: DESCRIBE HISTORY from the log."""
     out = []
     for v, f in _commit_files(path):
         info: dict[str, Any] = {"version": v}
@@ -1245,6 +1250,10 @@ def delta_history(path: str) -> list[dict[str, Any]]:
                     if "commitInfo" in d:
                         ci = d["commitInfo"]
                         info["operation"] = ci.get("operation")
-                        info["timestamp"] = ci.get("timestamp")
+                        info["timestamp"] = ci.get(
+                            "inCommitTimestamp", ci.get("timestamp")
+                        )
+                        if "userMetadata" in ci:
+                            info["userMetadata"] = ci["userMetadata"]
         out.append(info)
     return sorted(out, key=lambda x: -x["version"])

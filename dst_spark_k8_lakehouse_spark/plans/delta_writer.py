@@ -42,8 +42,8 @@ recompute their remove set on retry. Data files are uniquely named so
 an abandoned attempt leaves garbage, never corruption.
 
 Type mapping covers the engine's scalar surface (long/int/double/
-float/string/boolean/date/timestamp/decimal/binary + arrays); an
-unmapped type raises rather than writing a schemaString real Delta
+float/string/boolean/date/timestamp/decimal/binary + arrays and maps);
+an unmapped type raises rather than writing a schemaString real Delta
 would reject.
 """
 
@@ -86,6 +86,13 @@ def _delta_type(dt: T.DataType) -> Any:
             "type": "array",
             "elementType": _delta_type(dt.elementType),
             "containsNull": dt.containsNull,
+        }
+    if isinstance(dt, T.MapType):
+        return {
+            "type": "map",
+            "keyType": _delta_type(dt.keyType),
+            "valueType": _delta_type(dt.valueType),
+            "valueContainsNull": dt.valueContainsNull,
         }
     raise NotImplementedError(f"no Delta schema mapping for {dt}")
 
@@ -608,12 +615,26 @@ def _commit_from_state(
     )
 
 
-def _commit_info(operation: str) -> dict[str, Any]:
+def _commit_info(
+    operation: str, user_metadata: str | None = None
+) -> dict[str, Any]:
+    # user_metadata: the spec's free-form commitInfo.userMetadata
+    info: dict[str, Any] = {
+        "operation": operation,
+        "timestamp": int(time.time() * 1000),
+        "engineInfo": "dst-spark-k8-lakehouse-spark pure-python writer",
+    }
+    if user_metadata is not None:
+        info["userMetadata"] = user_metadata
+    return {"commitInfo": info}
+
+
+def _txn_action(txn: tuple[str, int]) -> dict[str, Any]:
     return {
-        "commitInfo": {
-            "operation": operation,
-            "timestamp": int(time.time() * 1000),
-            "engineInfo": "dst-spark-k8-lakehouse-spark pure-python writer",
+        "txn": {
+            "appId": txn[0],
+            "version": int(txn[1]),
+            "lastUpdated": int(time.time() * 1000),
         }
     }
 
@@ -652,9 +673,13 @@ def create_delta(
     generated: dict[str, str] | None = None,
     cluster_by: list[str] | None = None,
     identity: dict[str, dict[str, Any]] | None = None,
+    txn: tuple[str, int] | None = None,
+    user_metadata: str | None = None,
 ) -> None:
     """CREATE: version-0 commit (protocol + metaData + adds),
-    optionally Hive-partitioned by ``partition_by``.
+    optionally Hive-partitioned by ``partition_by``; ``txn`` and
+    ``user_metadata`` as in ``append_delta`` (a stream's first
+    micro-batch may create the table).
 
     ``column_mapping``: ``"none"`` (plain), ``"name"`` (fields pinned
     to their creation names as ``physicalName``; renames stay
@@ -894,7 +919,9 @@ def create_delta(
         if bumped is not None:
             meta.clear()
             meta.update(bumped)
-    actions.append(_commit_info("CREATE TABLE AS SELECT"))
+    if txn is not None:
+        actions.append(_txn_action(txn))
+    actions.append(_commit_info("CREATE TABLE AS SELECT", user_metadata))
     _commit(table, 0, actions)
 
 
@@ -924,7 +951,11 @@ def _reconcile_schema(
 
     mismatched = sorted(
         n for n, dt in df_types.items()
-        if n in by_name and by_name[n].dataType != dt
+        # simpleString: the type without nullability flags, which a
+        # schema merge never compares (F.array builds array<bigint>
+        # with containsNull=false, a parquet read with true)
+        if n in by_name
+        and by_name[n].dataType.simpleString() != dt.simpleString()
     )
     if mismatched:
         detail = {
@@ -1023,6 +1054,7 @@ def append_delta(
     table: str,
     merge_schema: bool = False,
     txn: tuple[str, int] | None = None,
+    user_metadata: str | None = None,
 ) -> int:
     """APPEND: adds only (plus a widened ``metaData`` when
     ``merge_schema`` evolved the schema). A lost commit race is
@@ -1035,6 +1067,7 @@ def append_delta(
     streaming ``foreachBatch`` sink replays against so a retried
     micro-batch lands exactly once (re-checked inside the retry loop,
     so a racing duplicate writer cannot double-commit either).
+    ``user_metadata`` becomes the commit's ``commitInfo.userMetadata``.
 
     Returns the committed version (-1 for an idempotent skip)."""
     from dst_spark_k8_lakehouse_spark.plans import delta_identity
@@ -1119,16 +1152,8 @@ def append_delta(
                 )
             )
         if txn is not None:
-            actions.append(
-                {
-                    "txn": {
-                        "appId": txn[0],
-                        "version": int(txn[1]),
-                        "lastUpdated": int(time.time() * 1000),
-                    }
-                }
-            )
-        actions.append(_commit_info("WRITE"))
+            actions.append(_txn_action(txn))
+        actions.append(_commit_info("WRITE", user_metadata))
         try:
             _commit(table, version, actions, pre_state=state)
             _maybe_auto_checkpoint(
@@ -1862,21 +1887,11 @@ def compact_delta(
             )
         df = df.coalesce(n_out)
         new = _write_data_files(df, table)
-        pv = {
-            phys.get(c, c): v for c, v in zip(part_cols, key)
-        }
-        prefix = "/".join(
-            _hive_seg_w(phys.get(c, c), v) for c, v in zip(part_cols, key)
+        phys_parts = [phys.get(c, c) for c in part_cols]
+        _place_in_partition(
+            table, new, phys_parts, dict(zip(phys_parts, key)),
+            data_change=False,
         )
-        for a in new:
-            a["add"]["partitionValues"] = pv
-            a["add"]["dataChange"] = False
-            if prefix:
-                rel = f"{prefix}/{a['add']['path']}"
-                dst = os.path.join(table, *rel.split("/"))
-                os.makedirs(os.path.dirname(dst), exist_ok=True)
-                os.replace(os.path.join(table, a["add"]["path"]), dst)
-                a["add"]["path"] = rel
         adds += new
         removes += [
             {
@@ -1917,6 +1932,29 @@ def _hive_seg_w(col: str, val: str | None) -> str:
         f"%{ord(ch):02X}" if ch in _HIVE_ESCAPE_W else ch for ch in val
     )
     return f"{col}={enc}"
+
+
+def _place_in_partition(
+    table: str, adds: list[dict[str, Any]], part_cols: list[str],
+    pv: dict[str, str | None], data_change: bool = True,
+) -> None:
+    """Stamp ``adds`` with the partition values ``pv`` (keyed by the
+    physical partition columns ``part_cols``) and move their files
+    into that Hive directory, so a rewrite keeps the reader's
+    single-scan layout. ``data_change=False`` marks a pure
+    reorganization (OPTIMIZE)."""
+    prefix = "/".join(_hive_seg_w(c, pv.get(c)) for c in part_cols)
+    for a in adds:
+        add = a["add"]
+        add["partitionValues"] = pv
+        if not data_change:
+            add["dataChange"] = False
+        if prefix:
+            rel = f"{prefix}/{add['path']}"
+            dst = os.path.join(table, *rel.split("/"))
+            os.makedirs(os.path.dirname(dst), exist_ok=True)
+            os.replace(os.path.join(table, add["path"]), dst)
+            add["path"] = rel
 
 
 def vacuum_delta(
@@ -1988,10 +2026,36 @@ def vacuum_delta(
     return sorted(removed)
 
 
-def overwrite_delta(df: DataFrame, table: str) -> int:
+def _replaced_schema(
+    meta: dict[str, Any], schema: T.StructType
+) -> dict[str, Any] | None:
+    """The ``metaData`` that makes ``schema`` the table's schema, or
+    None when it already is (nullability aside). Refused when the
+    table's columns carry metadata (column mapping, generated or
+    identity columns, defaults) or CHECK constraints."""
+    current = delta_reader.schema_from_json(meta["schemaString"])
+    if current.simpleString() == schema.simpleString():
+        return None
+    if any(f.metadata for f in current.fields) or constraints_of(meta):
+        raise NotImplementedError(
+            "overwrite_schema on a table with column metadata (mapping, "
+            "generated/identity columns, defaults) or CHECK constraints"
+        )
+    if not set(meta.get("partitionColumns") or []) <= set(schema.names):
+        raise ValueError("overwrite_schema must keep the partition columns")
+    return {**meta, "schemaString": _schema_string(schema)}
+
+
+def overwrite_delta(
+    df: DataFrame, table: str, user_metadata: str | None = None,
+    overwrite_schema: bool = False,
+) -> int:
     """OVERWRITE: remove every live file, add the new set, one commit.
     A lost commit race recomputes the remove set against the winner's
-    state and retries. Returns the committed version."""
+    state and retries. ``overwrite_schema`` (Delta's
+    ``overwriteSchema`` option) makes ``df``'s schema the table's in
+    the same commit; otherwise ``df`` must fit the table's schema.
+    Returns the committed version."""
     from dst_spark_k8_lakehouse_spark.plans import delta_identity
 
     adds: list[dict[str, Any]] | None = None
@@ -1999,22 +2063,25 @@ def overwrite_delta(df: DataFrame, table: str) -> int:
     used_specs: dict[str, dict[str, Any]] | None = None
     for _ in range(_MAX_COMMIT_RETRIES):
         state = delta_reader._replay(df.sparkSession, table, None)
-        df_in, id_specs = delta_identity.check_and_assign(
-            df, state["metaData"]
+        new_meta = (
+            _replaced_schema(state["metaData"], df.schema)
+            if overwrite_schema else None
         )
+        meta = new_meta or state["metaData"]
+        df_in, id_specs = delta_identity.check_and_assign(df, meta)
         generated_ids = any(c not in df.columns for c in id_specs)
         if adds is not None and generated_ids and id_specs != used_specs:
             adds = None  # raced watermark: re-generate ids (see append)
         aligned, meta_action, part_cols, phys = _reconcile_schema(
-            df_in, state["metaData"], merge_schema=False
+            df_in, meta, merge_schema=False
         )
         if meta_action is not None:  # unreachable with merge_schema=False
             raise AssertionError("overwrite must not evolve the schema")
         if adds is None:
             used_specs = id_specs
-            check_constraints(aligned, state["metaData"])
+            check_constraints(aligned, meta)
             out = _stamped_projection(
-                aligned, state["metaData"], list(aligned.columns), phys
+                aligned, meta, list(aligned.columns), phys
             )
             adds = _write_data_files(
                 out, table, [phys.get(c, c) for c in part_cols] or None
@@ -2025,7 +2092,10 @@ def overwrite_delta(df: DataFrame, table: str) -> int:
                 "concurrent schema change during overwrite retry; re-run"
             )
         now = int(time.time() * 1000)
-        actions: list[dict[str, Any]] = [
+        actions: list[dict[str, Any]] = (
+            [{"metaData": new_meta}] if new_meta else []
+        )
+        actions += [
             {
                 "remove": {
                     "path": p,
@@ -2042,7 +2112,7 @@ def overwrite_delta(df: DataFrame, table: str) -> int:
             )
             if bumped is not None:
                 actions.append({"metaData": bumped})
-        actions.append(_commit_info("WRITE"))
+        actions.append(_commit_info("WRITE", user_metadata))
         # the remove set was computed from THIS replayed state —
         # claiming its version + 1 makes the overwrite serializable
         # (a racing compaction/DML forces a re-replay, so the removes
@@ -2255,19 +2325,9 @@ def zorder_delta(
         n_out = n_files or max(1, total // (128 << 20))
         clustered = zorder_cluster(df, cols, n_out)
         new = _write_data_files(clustered, table)
-        pv = pvs[key]
-        prefix = "/".join(
-            _hive_seg_w(c, pv.get(c)) for c in part_cols
+        _place_in_partition(
+            table, new, part_cols, pvs[key], data_change=False
         )
-        for a in new:
-            a["add"]["partitionValues"] = pv
-            a["add"]["dataChange"] = False
-            if prefix:
-                nrel = f"{prefix}/{a['add']['path']}"
-                dst = os.path.join(table, *nrel.split("/"))
-                os.makedirs(os.path.dirname(dst), exist_ok=True)
-                os.replace(os.path.join(table, a["add"]["path"]), dst)
-                a["add"]["path"] = nrel
         adds += new
         removes += [
             {

@@ -5,9 +5,10 @@ The reference's notebooks speak SQL DML against Iceberg/Delta tables
 the Delta demo). Without those format jars, the same statements have no
 executable home in vanilla Spark — parquet tables reject row-level DML.
 This module is the thin parser shim that keeps API parity honest: the
-statement text a reference user already has dispatches onto
-``VersionedTable.update`` / ``.delete`` / ``.merge``, which reproduce
-the semantics as copy-on-write snapshots.
+statement text a reference user already has dispatches onto the
+native Delta and Iceberg DML (``delta_dml`` / ``iceberg_dml``), which
+execute it as file-granular copy-on-write commits; ``execute_dml``
+takes ``VersionedTable`` handles, ``execute_native_sql`` directories.
 
 Deliberately a shim, not a SQL frontend: expressions inside SET /
 WHERE / ON travel VERBATIM into the DataFrame layer (Spark parses
@@ -170,7 +171,7 @@ def _sql_literal(text: str):
 def _merge_keys(on_clause: str, aliases: set[str]) -> list[str]:
     """Equality-conjunct ON clause → merge key column list. Each
     conjunct must be ``a.k = b.k`` (or unqualified) on the SAME column
-    name — the only shape ``VersionedTable.merge`` expresses."""
+    name — the only shape a key-list MERGE expresses."""
     keys: list[str] = []
     for conj in re.split(r"\s+AND\s+", on_clause, flags=re.IGNORECASE):
         m = _ON_EQ_RE.match(conj)
@@ -197,8 +198,9 @@ def execute_dml(
     """Execute one UPDATE / DELETE / MERGE statement against versioned
     tables. ``tables`` maps statement table names to ``VersionedTable``
     instances (the catalog shim); MERGE sources resolve from
-    ``sources`` first, then from ``tables`` (reading their latest
-    snapshot). Returns the new snapshot version.
+    ``sources`` first, then from ``tables``. Returns the committed
+    version. The statement runs through ``execute_native_sql`` on the
+    tables' directories; any other statement raises ``ValueError``.
 
     Supported skeletons (expressions inside pass to Spark verbatim):
 
@@ -210,59 +212,14 @@ def execute_dml(
       (whole-row actions, matching Delta's ``UPDATE SET *`` /
       ``INSERT *`` shorthand; at least one WHEN clause required)
     """
-
-    def _table(name: str) -> VersionedTable:
-        if name not in tables:
-            raise ValueError(f"unknown table {name!r}; have {sorted(tables)}")
-        return tables[name]
-
-    sql = sql.strip().rstrip(";").strip()
-    if m := _UPDATE_RE.match(sql):
-        set_clause, where = _split_top_keyword(m["rest"], "WHERE")
-        return _table(m["table"]).update(
-            where or "true", _split_assignments(set_clause)
+    if not any(r.match(sql) for r in (_UPDATE_RE, _DELETE_RE, _MERGE_RE)):
+        raise ValueError(
+            f"not a supported DML statement: {sql.strip()[:80]!r}"
         )
-    if m := _DELETE_RE.match(sql):
-        before, where = _split_top_keyword(m["rest"], "WHERE")
-        if before.strip():
-            raise ValueError(
-                f"unexpected text after DELETE FROM table: {before.strip()!r}"
-            )
-        return _table(m["table"]).delete(where or "true")
-    if m := _MERGE_RE.match(sql):
-        target = _table(m["target"])
-        src_name = m["source"]
-        if sources and src_name in sources:
-            source = sources[src_name]
-        else:
-            source = _table(src_name).read()
-        aliases = {
-            a
-            for a in (
-                m["talias"] or m["target"],
-                m["salias"] or m["source"],
-            )
-        }
-        on_clause, when = _split_top_keyword(m["rest"], "WHEN")
-        if when is None:
-            raise ValueError("MERGE needs at least one WHEN clause")
-        when = "WHEN" + when
-        update_matched = bool(_MATCHED_RE.search(when))
-        insert_unmatched = bool(_NOT_MATCHED_RE.search(when))
-        recognized = _MATCHED_RE.sub("", _NOT_MATCHED_RE.sub("", when))
-        if recognized.strip():
-            raise ValueError(
-                f"unsupported MERGE WHEN clause(s): {recognized.strip()!r}"
-            )
-        if not (update_matched or insert_unmatched):
-            raise ValueError("MERGE needs at least one WHEN clause")
-        return target.merge(
-            source,
-            on=_merge_keys(on_clause, aliases),
-            update_when_matched=update_matched,
-            insert_when_not_matched=insert_unmatched,
-        )
-    raise ValueError(f"not a supported DML statement: {sql.strip()[:80]!r}")
+    spark = next(iter(tables.values())).spark
+    return execute_native_sql(
+        spark, sql, {n: t.path for n, t in tables.items()}, sources
+    )
 
 
 # ------------------------------------------------- native-table SQL
@@ -1040,23 +997,10 @@ def _describe_history(spark, path: str) -> DataFrame:
 
     rows = []
     if delta_reader.is_delta_table(path):
-        for v, f in sorted(
-            delta_reader._commit_files(path), reverse=True
-        ):
-            op, ts = None, None
-            with open(f) as fh:
-                for line in fh:
-                    line = line.strip()
-                    if not line:
-                        continue
-                    d = json.loads(line)
-                    if "commitInfo" in d:
-                        ci = d["commitInfo"]
-                        op = ci.get("operation")
-                        ts = ci.get(
-                            "inCommitTimestamp", ci.get("timestamp")
-                        )
-            rows.append((int(v), op, int(ts) if ts else None))
+        rows = [
+            (h["version"], h.get("operation"), h.get("timestamp"))
+            for h in delta_reader.delta_history(path)
+        ]
     else:
         for s in iceberg_reader.iceberg_snapshots(path):
             rows.append(

@@ -38,8 +38,6 @@ import datetime
 import re
 from typing import Any, Callable
 
-import pandas as pd  # the bucket pandas-UDF type hints resolve here
-
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -304,12 +302,16 @@ def spark_transform_column(
 
 
 def _bucket_column(c: Column, n: int, dtype: T.DataType) -> Column:
+    # Scalar pandas UDFs (Series -> Series, pandas_udf's default when a
+    # function has no type hints): pandas loads on the first bucket
+    # transform, not when this module is imported.
+    import pandas as pd
     from pyspark.sql.functions import pandas_udf
 
     if isinstance(dtype, (T.IntegerType, T.LongType,
                           T.ShortType, T.ByteType)):
         @pandas_udf("int")
-        def _b(s: pd.Series) -> pd.Series:
+        def _b(s):
             import numpy as np
 
             mask = s.notna()
@@ -322,7 +324,7 @@ def _bucket_column(c: Column, n: int, dtype: T.DataType) -> Column:
         return _b(c)
     if isinstance(dtype, T.DateType):
         @pandas_udf("int")
-        def _b(s: pd.Series) -> pd.Series:
+        def _b(s):
             import numpy as np
 
             dt = pd.to_datetime(s)
@@ -340,7 +342,7 @@ def _bucket_column(c: Column, n: int, dtype: T.DataType) -> Column:
         return _b(c)
     if isinstance(dtype, (T.TimestampType, T.TimestampNTZType)):
         @pandas_udf("int")
-        def _b(s: pd.Series) -> pd.Series:
+        def _b(s):
             import numpy as np
 
             mask = s.notna()
@@ -357,7 +359,7 @@ def _bucket_column(c: Column, n: int, dtype: T.DataType) -> Column:
         return _b(c)
     if isinstance(dtype, T.StringType):
         @pandas_udf("int")
-        def _b(s: pd.Series) -> pd.Series:
+        def _b(s):
             # variable-length inputs: per-row hash inside the Arrow
             # batch (strings are the cold bucket shape; ids are longs)
             return s.map(

@@ -1,70 +1,34 @@
-"""Versioned lakehouse tables over plain parquet (SURVEY §2.2, §7.4).
-
-The reference gets ACID tables, time travel, DML, and schema evolution
-from Delta 3.2 / Iceberg 1.9 jars (``scripts/download-jars.sh:84-91``).
-Neither ships in this container, so this module provides the same
-*semantics* with the same *mechanism* both formats use — an append-only
-log of snapshots, each listing immutable data files — implemented as a
-JSON manifest over parquet directories:
-
-- append / overwrite with schema-merge      (``spark_logger.py:55-57``,
-  ``03_delta_demo.ipynb:163``)
-- row-level UPDATE / DELETE as copy-on-write rewrites
-  (``02_iceberg_demo.ipynb:91,103`` — Delta/Iceberg plan the same
-  rewrite through their DML extensions)
-- time travel by version                     (``versionAsOf``,
-  ``03_delta_demo.ipynb:134``; snapshot-id, ``02_…ipynb:155-158``)
-- DESCRIBE HISTORY analog                    (``03_delta_demo.ipynb:123``)
-- VACUUM with version retention              (``03_delta_demo.ipynb:186``)
-- metadata-only column rename                (``02_iceberg_demo.ipynb:123``
-  — Iceberg renames via field-id mapping; we store a rename chain in
-  the manifest and apply it at read)
-
-Scale: data files are immutable and only the manifest mutates, so reads
-at any version are plain parquet scans (pushdown/pruning intact) and
-concurrent readers never see partial writes. Single-writer is assumed
-(the real formats add optimistic-concurrency commits on top of exactly
-this layout; a driver-coordinated pipeline satisfies it).
+"""Versioned lakehouse tables addressed by directory path (SURVEY §2.2,
+§7.4): ``VersionedTable`` is a thin handle over the jar-free Delta stack
+(``delta_writer`` / ``delta_reader`` / ``delta_dml``), so every table it
+writes is a Delta table — the format the reference's own metrics code
+appends to (``spark_logger.py:38,55``), readable by any Delta 3.x
+runtime. Each mutating call commits one Delta version (none for a DML
+statement that matches no row or a compaction with nothing to merge),
+so ``read(version=N)`` addresses the state after the N-th commit.
+``props`` of ``create`` / ``append`` / ``overwrite`` are stored as JSON
+in the commit's ``commitInfo.userMetadata`` (the spec's free-form
+commit field). The Delta modules are imported per call, so importing
+the ``plans`` package stays cheap.
 """
 
 from __future__ import annotations
 
 import json
 import os
-import time
-import uuid
-from dataclasses import dataclass, field
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-MANIFEST = "_manifest.json"
-
-
-@dataclass
-class Snapshot:
-    version: int
-    timestamp_ms: int
-    operation: str
-    files: list[str]  # table-root-relative parquet directories
-    renames: list[list[str]]  # [old, new] chain, applied in order
-    # Commit metadata, e.g. streaming transaction identifiers (the
-    # analog of Delta's `txn` action: appId + batch version recorded
-    # with the commit so retried micro-batches are detectable).
-    props: dict[str, Any] = field(default_factory=dict)
-    # Metadata-only dropped columns, hidden at read time (Iceberg
-    # drop-column semantics: zero data files rewritten).
-    drops: list[str] = field(default_factory=list)
-
 
 def zorder_cluster(
     df: DataFrame, cols: list[str], n_files: int = 8
 ) -> DataFrame:
-    """THE Z-ORDER KERNEL (shared by ``VersionedTable.zorder`` and
-    the native-log ``delta_writer.zorder_delta``): re-cluster ``df``
-    on the interleaved-bit order of ``cols`` without a global sort of
-    raw values —
+    """THE Z-ORDER KERNEL (shared by ``delta_writer.zorder_delta`` and
+    Iceberg's ``rewrite_data_files``): re-cluster ``df`` on the
+    interleaved-bit order of ``cols`` without a global sort of raw
+    values —
 
     1. per-column 256-bucket boundaries via ``approxQuantile``
        (Greenwald-Khanna sketch; driver state = 255 numbers per
@@ -127,124 +91,63 @@ def zorder_cluster(
 
 
 class VersionedTable:
-    """A writable, versioned parquet table addressed by directory path."""
+    """A writable, versioned Delta table addressed by directory path."""
 
     def __init__(self, spark: SparkSession, path: str):
+        if os.path.exists(
+            os.path.join(path, "_manifest.json")
+        ) and not os.path.isdir(os.path.join(path, "_delta_log")):
+            raise ValueError(
+                f"{path} holds a table in the retired JSON-manifest "
+                "format (_manifest.json, no _delta_log); rebuild it by "
+                "re-running the job that wrote it"
+            )
         self.spark = spark
         self.path = path
 
-    # -- manifest ----------------------------------------------------
-    def _manifest_path(self) -> str:
-        return os.path.join(self.path, MANIFEST)
-
-    def _load(self) -> list[Snapshot]:
-        if not os.path.exists(self._manifest_path()):
-            return []
-        with open(self._manifest_path()) as f:
-            return [Snapshot(**s) for s in json.load(f)]
-
-    def _commit(self, snap: Snapshot) -> None:
-        """Atomic manifest swap: write-temp + rename, the same
-        last-writer-wins commit primitive Delta's _delta_log relies on
-        (rename atomicity from the filesystem / object-store layer)."""
-        snaps = self._load()
-        snaps.append(snap)
-        tmp = self._manifest_path() + f".tmp-{uuid.uuid4().hex}"
-        with open(tmp, "w") as f:
-            json.dump([vars(s) for s in snaps], f, indent=1)
-        os.replace(tmp, self._manifest_path())
-
-    def _new_data_dir(self, version: int) -> str:
-        return f"v{version:06d}-{uuid.uuid4().hex[:8]}"
-
-    # -- writes ------------------------------------------------------
-    def _write(
-        self,
-        df: DataFrame,
-        operation: str,
-        base_files: list[str],
-        props: dict[str, Any] | None = None,
-    ) -> int:
-        snaps = self._load()
-        version = len(snaps)
-        rel = self._new_data_dir(version)
-        df.write.mode("overwrite").parquet(os.path.join(self.path, rel))
-        prev_renames = snaps[-1].renames if snaps else []
-        prev_drops = snaps[-1].drops if snaps else []
-        self._commit(
-            Snapshot(
-                version=version,
-                timestamp_ms=int(time.time() * 1000),
-                operation=operation,
-                files=[*base_files, rel],
-                renames=list(prev_renames),
-                props=dict(props or {}),
-                drops=list(prev_drops),
-            )
-        )
-        return version
-
+    # -- writes (each returns the committed version) -----------------
     def create(self, df: DataFrame, props: dict[str, Any] | None = None) -> int:
-        """CTAS (``CREATE TABLE … USING`` + write, ``getting_started.py:
-        130-151``; ``writeTo(...).createOrReplace()``, ``05_…ipynb:92``)."""
-        os.makedirs(self.path, exist_ok=True)
-        return self._write(df, "CREATE", [], props)
+        """CTAS with ``createOrReplace`` meaning (``getting_started.py:
+        130-151``, ``05_…ipynb:92``): on an existing table, an
+        overwrite that also replaces the schema."""
+        from dst_spark_k8_lakehouse_spark.plans import delta_reader, delta_writer
+
+        if delta_reader.is_delta_table(self.path):
+            return self.overwrite(df, props)
+        delta_writer.create_delta(df, self.path, user_metadata=_text(props))
+        return 0
 
     def append(self, df: DataFrame, props: dict[str, Any] | None = None) -> int:
-        """Append with implicit schema merge — new files may carry new
-        columns; reads reconcile with ``mergeSchema`` exactly like the
-        reference's ``mode("append").option("mergeSchema","true")``
-        (``spark_logger.py:55-57``)."""
-        current = self._load()
-        base = current[-1].files if current else []
-        return self._write(df, "APPEND", base, props)
+        """Append with schema merge (``spark_logger.py:55-57``): new
+        columns join the schema, earlier rows read them as NULL."""
+        from dst_spark_k8_lakehouse_spark.plans import delta_writer
 
-    def committed_props(self, key: str) -> set[Any]:
-        """All values recorded under ``key`` across snapshot props —
-        the lookup idempotent streaming sinks use to skip a retried
-        micro-batch (Delta `txn`-action semantics)."""
-        return {
-            s.props[key] for s in self._load() if key in s.props
-        }
-
-    def latest_prop(self, key: str, default: Any = None) -> Any:
-        """The value of ``key`` in the MOST RECENT snapshot that set it.
-        Table-state properties (e.g. an index's cell count) must come
-        from here, not ``committed_props`` — aggregating over history
-        would resurrect values from snapshots that were since
-        overwritten (a rebuilt index with fewer cells must win over the
-        stale larger count)."""
-        for s in reversed(self._load()):
-            if key in s.props:
-                return s.props[key]
-        return default
+        return delta_writer.append_delta(
+            df, self.path, merge_schema=True, user_metadata=_text(props)
+        )
 
     def overwrite(self, df: DataFrame, props: dict[str, Any] | None = None) -> int:
-        """INSERT OVERWRITE / ``mode("overwrite")`` (``demo.py:153``,
-        ``03_delta_demo.ipynb:102-104``): new snapshot references only
-        the new files; old files stay for time travel until VACUUM."""
-        return self._write(df, "OVERWRITE", [], props)
+        """INSERT OVERWRITE (``03_delta_demo.ipynb:102-104``); ``df``'s
+        schema becomes the table's. Old files stay until ``vacuum``."""
+        from dst_spark_k8_lakehouse_spark.plans import delta_writer
+
+        return delta_writer.overwrite_delta(
+            df, self.path, _text(props), overwrite_schema=True
+        )
 
     def update(self, condition: str, assignments: dict[str, str]) -> int:
-        """Row-level UPDATE (``UPDATE t SET … WHERE …``,
-        ``02_iceberg_demo.ipynb:91``) as a copy-on-write rewrite:
-        matching rows get the assignment expressions, others pass
-        through, result becomes a full new snapshot."""
-        df = self.read()
-        exprs = [
-            f"CASE WHEN ({condition}) THEN ({assignments[col]}) "
-            f"ELSE {col} END AS {col}"
-            if col in assignments
-            else col
-            for col in df.columns
-        ]
-        return self._write(df.selectExpr(*exprs), "UPDATE", [])
+        """``UPDATE t SET … WHERE …`` (``02_iceberg_demo.ipynb:91``)."""
+        from dst_spark_k8_lakehouse_spark.plans import delta_dml
+
+        return delta_dml.update_delta(
+            self.spark, self.path, condition, assignments
+        )
 
     def delete(self, condition: str) -> int:
-        """Row-level DELETE (``DELETE FROM t WHERE …``,
-        ``02_iceberg_demo.ipynb:103``): anti-filter rewrite."""
-        df = self.read().where(f"NOT ({condition}) OR ({condition}) IS NULL")
-        return self._write(df, "DELETE", [])
+        """``DELETE FROM t WHERE …`` (``02_iceberg_demo.ipynb:103``)."""
+        from dst_spark_k8_lakehouse_spark.plans import delta_dml
+
+        return delta_dml.delete_delta(self.spark, self.path, condition)
 
     def merge(
         self,
@@ -253,243 +156,121 @@ class VersionedTable:
         update_when_matched: bool = True,
         insert_when_not_matched: bool = True,
     ) -> int:
-        """MERGE INTO (Delta/Iceberg upsert; the dedup'd-upsert pattern
-        of SURVEY §7.4): source rows update matching target rows by key
-        and/or insert unmatched ones, as one new snapshot.
+        """MERGE INTO by key (SURVEY §7.4); new source columns join the
+        schema, duplicate source keys raise ``ValueError``."""
+        from dst_spark_k8_lakehouse_spark.plans import delta_dml
 
-        Formulation is join-free on the update path: target rows whose
-        key appears in source are replaced wholesale (left-anti join),
-        then source rows are unioned in — one shuffle per side on the
-        merge key. The source must be unique per key (enforced — a
-        multi-match MERGE is ambiguous and Delta errors likewise).
-        """
-        target = self.read()
-        dup_keys = (
-            source.groupBy(*on).count().where("count > 1").limit(1).count()
+        return delta_dml.merge_delta(
+            self.spark, self.path, source, on,
+            update_when_matched=update_when_matched,
+            insert_when_not_matched=insert_when_not_matched,
+            merge_schema=True,
         )
-        if dup_keys:
-            raise ValueError("MERGE source has duplicate keys")
-        if update_when_matched:
-            kept_target = target.join(source.select(*on), on, "left_anti")
-            incoming = source
-        else:
-            kept_target = target
-            incoming = source.join(target.select(*on), on, "left_anti")
-        if not insert_when_not_matched:
-            incoming = incoming.join(target.select(*on), on, "left_semi")
-        merged = kept_target.unionByName(incoming, allowMissingColumns=True)
-        return self._write(merged, "MERGE", [])
 
     def rename_column(self, old: str, new: str) -> int:
-        """ALTER TABLE RENAME COLUMN (``02_iceberg_demo.ipynb:123``) —
-        metadata-only: appended to the manifest rename chain, applied at
-        read time; zero data files touched (Iceberg field-id mapping
-        semantics, not a rewrite)."""
-        snaps = self._load()
-        if not snaps:
-            raise ValueError("rename on empty table")
-        last = snaps[-1]
-        self._commit(
-            Snapshot(
-                version=len(snaps),
-                timestamp_ms=int(time.time() * 1000),
-                operation=f"RENAME {old}->{new}",
-                files=list(last.files),
-                renames=[*last.renames, [old, new]],
-                drops=list(last.drops),
-            )
-        )
-        return len(snaps)
+        """Metadata-only RENAME COLUMN (``02_iceberg_demo.ipynb:123``);
+        row-level DML on the renamed table then raises
+        ``NotImplementedError``."""
+        from dst_spark_k8_lakehouse_spark.plans import delta_writer
+
+        return delta_writer.rename_column(self.spark, self.path, old, new)
 
     def drop_column(self, col: str) -> int:
-        """ALTER TABLE DROP COLUMN — metadata-only like rename: the
-        column is hidden at read time (Iceberg drop semantics); zero
-        data files rewritten, and time travel to earlier versions
-        still shows it."""
-        snaps = self._load()
-        if not snaps:
-            raise ValueError("drop on empty table")
-        last = snaps[-1]
-        if col in last.drops:
-            raise ValueError(f"column already dropped: {col}")
-        # Validate against the CURRENT visible schema (Iceberg DROP
-        # COLUMN errors on unknown columns): a typo'd drop would commit
-        # silently and permanently hide any future column of that name
-        # arriving via schema-merging append.
-        current_cols = self.read().columns
-        if col not in current_cols:
-            raise ValueError(
-                f"cannot drop unknown column: {col} "
-                f"(table has {current_cols})"
-            )
-        self._commit(
-            Snapshot(
-                version=len(snaps),
-                timestamp_ms=int(time.time() * 1000),
-                operation=f"DROP COLUMN {col}",
-                files=list(last.files),
-                renames=list(last.renames),
-                drops=[*last.drops, col],
-            )
+        """Metadata-only DROP COLUMN. An append that brings the name
+        back adds a NEW column: earlier rows read NULL there."""
+        from dst_spark_k8_lakehouse_spark.plans import delta_writer
+
+        return delta_writer.drop_column(self.spark, self.path, col)
+
+    def compact(self) -> int:
+        """OPTIMIZE: bin-pack the live files (one per append) into
+        ~128 MiB files; the current version if nothing needed it."""
+        from dst_spark_k8_lakehouse_spark.plans import delta_writer
+
+        v = delta_writer.compact_delta(self.spark, self.path)
+        return v if v >= 0 else delta_writer._next_version(self.path) - 1
+
+    def zorder(self, cols: list[str], n_files: int = 8) -> int:
+        """OPTIMIZE ZORDER BY ``cols`` into ``n_files`` files
+        (``zorder_cluster``)."""
+        from dst_spark_k8_lakehouse_spark.plans import delta_writer
+
+        return delta_writer.zorder_delta(self.spark, self.path, cols, n_files)
+
+    def vacuum(self, *, retain_last: int = 1) -> list[str]:
+        """VACUUM (``03_delta_demo.ipynb:182-186``): delete the data
+        files none of the ``retain_last`` newest versions reference;
+        returns their table-relative paths."""
+        from dst_spark_k8_lakehouse_spark.plans import delta_writer
+
+        return delta_writer.vacuum_delta(
+            self.spark, self.path, retain_versions=retain_last
         )
-        return len(snaps)
 
     # -- reads -------------------------------------------------------
     def read(self, version: int | None = None) -> DataFrame:
-        """Scan the table, optionally time-travelling (``versionAsOf``).
+        """Scan, optionally time-travelling (``versionAsOf``); a version
+        the log does not hold raises ``ValueError``."""
+        from dst_spark_k8_lakehouse_spark.plans import delta_reader
 
-        ``mergeSchema`` reconciles evolved schemas across snapshots'
-        files; the rename chain is applied afterwards so old files'
-        column names resolve to the current ones."""
-        snaps = self._load()
-        if not snaps:
-            raise FileNotFoundError(f"no table at {self.path}")
-        if version is None:
-            snap = snaps[-1]
-        else:
-            if not 0 <= version < len(snaps):
-                raise ValueError(
-                    f"version {version} not in [0, {len(snaps) - 1}]"
-                )
-            snap = snaps[version]
-        paths = [os.path.join(self.path, f) for f in snap.files]
-        df = self.spark.read.option("mergeSchema", "true").parquet(*paths)
-        for old, new in snap.renames:
-            if old in df.columns and new in df.columns:
-                # files written BEFORE the rename carry `old`, files
-                # appended AFTER it already carry `new`; mergeSchema
-                # surfaces both — fold them into one column (each file
-                # populates exactly one side, so coalesce is lossless)
-                from pyspark.sql import functions as F
-
-                df = df.withColumn(
-                    new, F.coalesce(F.col(new), F.col(old))
-                ).drop(old)
-            elif old in df.columns:
-                df = df.withColumnRenamed(old, new)
-        if snap.drops:
-            df = df.drop(*[c for c in snap.drops if c in df.columns])
-        return df
+        return delta_reader.read_delta(self.spark, self.path, version=version)
 
     def history(self) -> DataFrame:
-        """DESCRIBE HISTORY analog (``03_delta_demo.ipynb:123``;
-        Iceberg ``.snapshots`` / ``.history`` metadata tables,
-        ``02_…ipynb:143``)."""
-        rows = [
-            (s.version, s.timestamp_ms, s.operation, len(s.files))
-            for s in self._load()
-        ]
+        """DESCRIBE HISTORY, oldest first, with Delta's operation names
+        and the number of live data files at each version."""
         from dst_spark_k8_lakehouse_spark.localrel import local_frame
+        from dst_spark_k8_lakehouse_spark.plans import delta_reader
 
+        rows = [
+            (h["version"], h.get("timestamp"), h.get("operation"),
+             len(self._files(h["version"])))
+            for h in reversed(delta_reader.delta_history(self.path))
+        ]
         return local_frame(
-            self.spark,
-            rows,
+            self.spark, rows,
             "version int, timestamp_ms long, operation string, n_files int",
         )
 
     def files(self, version: int | None = None) -> DataFrame:
-        """Iceberg ``.files`` metadata-table analog: one row per data
-        directory of the (current or time-travelled) snapshot with its
-        parquet file count and byte size — the inputs a planner or a
-        compaction policy would inspect."""
-        snaps = self._load()
-        if not snaps:
-            raise FileNotFoundError(f"no table at {self.path}")
-        if version is None:
-            snap = snaps[-1]
-        else:
-            if not 0 <= version < len(snaps):
-                raise ValueError(
-                    f"version {version} not in [0, {len(snaps) - 1}]"
-                )
-            snap = snaps[version]
-        rows: list[tuple[str, int, int]] = []
-        for rel in snap.files:
-            full = os.path.join(self.path, rel)
-            parts = [
-                f
-                for f in os.listdir(full)
-                if f.endswith(".parquet") and not f.startswith("_")
-            ]
-            rows.append(
-                (
-                    rel,
-                    len(parts),
-                    sum(
-                        os.path.getsize(os.path.join(full, f)) for f in parts
-                    ),
-                )
-            )
+        """The ``.files`` metadata table: one row per live data file."""
         from dst_spark_k8_lakehouse_spark.localrel import local_frame
 
-        return local_frame(
-            self.spark, rows,
-            "data_dir string, n_parquet_files int, bytes long",
+        rows = [(p, int(a["size"])) for p, a in self._files(version).items()]
+        return local_frame(self.spark, rows, "path string, bytes long")
+
+    def _files(self, version: int | None) -> dict[str, dict]:
+        from dst_spark_k8_lakehouse_spark.plans import delta_reader
+
+        return delta_reader.plan_file_list(
+            self.spark, self.path, version=version
+        )["files"]
+
+    def committed_props(self, key: str) -> set[Any]:
+        """Every value recorded under ``key`` across the history."""
+        return {p[key] for p in self._props() if key in p}
+
+    def latest_prop(self, key: str, default: Any = None) -> Any:
+        """``key`` from the NEWEST commit that set it — table state
+        such as an index's cell count, where a rebuild must win over
+        older values."""
+        return next(
+            (p[key] for p in reversed(self._props()) if key in p), default
         )
 
-    def compact(self) -> int:
-        """OPTIMIZE-style compaction: rewrite the current snapshot's
-        data directories (one per append — a streaming sink produces
-        one per micro-batch) into a single directory as a new
-        snapshot. Older versions stay time-travellable until
-        ``vacuum``; reads after compaction open one dir instead of N
-        (the small-files problem is a listing/open-cost problem at
-        100 TB, not a correctness one)."""
-        return self._write(self.read(), "COMPACT", [])
+    def _props(self) -> list[dict[str, Any]]:
+        """Props of the commits that carry them, oldest first."""
+        from dst_spark_k8_lakehouse_spark.plans import delta_reader
 
-    def zorder(self, cols: list[str], n_files: int = 8) -> int:
-        """OPTIMIZE ZORDER BY: rewrite the current snapshot clustered on
-        the interleaved-bit order of ``cols``, so files carry TIGHT
-        min/max ranges on EVERY listed column and a selective predicate
-        on any of them prunes most files/row groups (Delta's
-        ``OPTIMIZE t ZORDER BY (a, b)``; linear order sorts well on the
-        leading column only).
+        out = []
+        for h in reversed(delta_reader.delta_history(self.path)):
+            try:
+                props = json.loads(h.get("userMetadata") or "null")
+            except ValueError:
+                continue  # free text from another writer
+            if isinstance(props, dict):
+                out.append(props)
+        return out
 
-        Scale-correct construction — no global sort of raw values:
 
-        1. per-column 256-bucket boundaries via ``approxQuantile``
-           (Greenwald-Khanna sketch; driver state = 255 numbers per
-           column, regardless of table size),
-        2. bucket id per row from the broadcast boundary array (a
-           ``filter``-count over 255 literals, map-only),
-        3. z-value by bit-interleaving the 8-bit bucket ids (built as
-           a shift-add expression in Python, evaluated in codegen),
-        4. ``repartitionByRange(n_files, z)`` + in-partition sort —
-           ONE range shuffle, the same cost shape as a ``compact``.
-
-        Quantile bucketization also makes the interleave skew-proof:
-        value ranges with more rows get more buckets, so files end up
-        near-equal-sized even on zipfian keys.
-        """
-        clustered = zorder_cluster(self.read(), cols, n_files)
-        return self._write(
-            clustered, "ZORDER", [], props={"zorder_by": ",".join(cols)}
-        )
-
-    def vacuum(self, *, retain_last: int = 1) -> list[str]:
-        """VACUUM (``03_delta_demo.ipynb:182-186``): drop data dirs not
-        referenced by the ``retain_last`` most recent snapshots; those
-        older versions stop being time-travellable — same trade-off the
-        reference demos with ``RETAIN 0 HOURS``. Keyword-only: the
-        Delta backend's retention unit is hours (``retain_hours=``),
-        so a positional number must not silently change meaning across
-        backends."""
-        import shutil
-
-        if retain_last < 1:
-            # snaps[-0:] would slice the WHOLE list — "retain zero
-            # versions" would silently retain everything
-            raise ValueError(f"retain_last must be >= 1, got {retain_last}")
-        snaps = self._load()
-        keep = {f for s in snaps[-retain_last:] for f in s.files}
-        removed = []
-        for entry in sorted(os.listdir(self.path)):
-            full = os.path.join(self.path, entry)
-            if (
-                os.path.isdir(full)
-                and entry not in keep
-                and entry.startswith("v")
-            ):
-                shutil.rmtree(full)
-                removed.append(entry)
-        return removed
+def _text(props: dict[str, Any] | None) -> str | None:
+    return json.dumps(props) if props else None

@@ -55,6 +55,13 @@ def query(query_id: str, oracle: str | None = None) -> Callable[[F], F]:
 # ids whose only green row is the oldest (round 1). Rotation log with
 # last-green round per id lives in COVERAGE.md.
 PRIORITY: list[str] = [
+    # (b) builders that now reach Delta through VersionedTable:
+    "d10_update_sql",
+    "d11_delete_sql",
+    "d12_time_travel",
+    "d13_merge_sql",
+    "d15_zorder_preserves",
+    "l4_ann_ivf_probe",
     # ---- r13 rotation (VERDICT r12 item 2 — the written r13 front,
     # derived from the actual last-green map over CORRECTNESS_r*.json,
     # not the stale r12 comment the judge flagged).
@@ -120,6 +127,7 @@ PRIORITY: list[str] = [
     "l4_ivf_recall",
     "l3_langid",
     "l3_langid_eval",
+    # (the six (b) ids above push the last six past a 50-id cap)
     # 50 exactly (the three NEW r13 oracle ids — s13_kafka_group_
     # resume, t12_stateful_running_agg, t13_sessionize — took the
     # slots of s8_range, s1_parquet_scan and a1_count: trivial r07

@@ -28,8 +28,8 @@ def _lakehouse_extensions() -> dict[str, str]:
     Mirrors ``connector.py:94-102`` (``spark.sql.extensions`` =
     Iceberg + Delta; Delta as the ``spark_catalog``). In this container
     neither package is installed, so this returns {} — the engine's
-    lakehouse layer (``plans/``) provides parquet-native fallbacks with
-    the same semantics (versioned writes, schema-merge, time travel).
+    lakehouse layer (``plans/``) writes and reads both formats natively,
+    without the jars.
     """
     conf: dict[str, str] = {}
     extensions: list[str] = []

@@ -572,23 +572,20 @@ def write_stream_batch_to_table(
     batch_df: DataFrame, batch_id: int, table_path: str
 ) -> bool:
     """Idempotent ``foreachBatch`` body for the versioned table sink:
-    the snapshot commit records ``stream_batch_id`` (the analog of
-    Delta's ``txn`` action), and a batch whose id is already committed
-    is skipped — so a retry after a crash between the table commit and
-    the checkpoint commit does not produce a duplicate snapshot.
-    Returns True if the batch was written, False if skipped."""
-    import os
+    each micro-batch commits with Delta's ``txn`` action (one app id
+    per table, the mechanism ``delta_sink.stream_to_delta`` uses), so
+    a batch the log already records is skipped — a retry after a crash
+    between the table commit and the checkpoint commit does not produce
+    a duplicate version. The first batch creates the table. Returns
+    True if the batch was written, False if skipped."""
+    from dst_spark_k8_lakehouse_spark.plans import delta_reader, delta_writer
 
-    from dst_spark_k8_lakehouse_spark.plans import VersionedTable
-
-    table = VersionedTable(batch_df.sparkSession, table_path)
-    props = {"stream_batch_id": batch_id}
-    if os.path.exists(table._manifest_path()):
-        if batch_id in table.committed_props("stream_batch_id"):
-            return False
-        table.append(batch_df, props)
-    else:
-        table.create(batch_df, props)
+    txn = ("versioned-table-sink", int(batch_id))
+    if delta_reader.is_delta_table(table_path):
+        return delta_writer.append_delta(
+            batch_df, table_path, merge_schema=True, txn=txn
+        ) >= 0
+    delta_writer.create_delta(batch_df, table_path, txn=txn)
     return True
 
 
@@ -600,7 +597,7 @@ def foreach_batch_to_table(
     (append, schema-merging). Effectively-once end to end: the
     checkpoint skips batches the stream knows are done, and
     ``write_stream_batch_to_table`` skips batches the TABLE knows are
-    done (snapshot-recorded ``stream_batch_id``), covering the
+    done (the log's ``txn`` watermark), covering the
     crash-between-sink-commit-and-checkpoint-commit window."""
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:

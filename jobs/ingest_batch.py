@@ -30,7 +30,7 @@ sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 from dst_spark_k8_lakehouse_spark import get_session  # noqa: E402
 from dst_spark_k8_lakehouse_spark.llm import dedup  # noqa: E402
 from dst_spark_k8_lakehouse_spark.metrics import MetricContext  # noqa: E402
-from dst_spark_k8_lakehouse_spark.plans import VersionedTable  # noqa: E402
+from dst_spark_k8_lakehouse_spark.plans import VersionedTable, delta_reader  # noqa: E402
 from jobs.curate_corpus import quality_gate  # noqa: E402
 
 
@@ -110,9 +110,7 @@ def run(
     sigs_t = VersionedTable(spark, f"{state_dir}/signatures")
     hashes_t = VersionedTable(spark, f"{state_dir}/hashes")
 
-    import os
-
-    if not os.path.exists(hashes_t._manifest_path()):
+    if not delta_reader.is_delta_table(hashes_t.path):
         hashes_t.create(bootstrap_hashes(corpus_t.read()))
 
     existing_sigs = sigs_t.read()

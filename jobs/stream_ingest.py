@@ -48,7 +48,7 @@ from pyspark.sql import functions as F  # noqa: E402
 
 from dst_spark_k8_lakehouse_spark import get_session  # noqa: E402
 from dst_spark_k8_lakehouse_spark.llm import dedup  # noqa: E402
-from dst_spark_k8_lakehouse_spark.plans import VersionedTable  # noqa: E402
+from dst_spark_k8_lakehouse_spark.plans import VersionedTable, delta_reader  # noqa: E402
 from jobs.ingest_batch import bootstrap_hashes  # noqa: E402
 from jobs.ingest_batch import run as ingest_run  # noqa: E402
 
@@ -68,12 +68,10 @@ def _reconcile_state(spark: SparkSession, state_dir: str) -> None:
     and signature state rows for any corpus doc missing them. No-op on
     a clean state; O(missing docs) otherwise — state is always
     recoverable from corpus text because ingest appends corpus FIRST."""
-    import os
-
     corpus_t = VersionedTable(spark, f"{state_dir}/corpus")
     hashes_t = VersionedTable(spark, f"{state_dir}/hashes")
     sigs_t = VersionedTable(spark, f"{state_dir}/signatures")
-    if not os.path.exists(hashes_t._manifest_path()):
+    if not delta_reader.is_delta_table(hashes_t.path):
         return  # first ingest bootstraps hashes itself
     corpus = corpus_t.read()
     missing_h = corpus.join(

@@ -155,6 +155,29 @@ def test_python_writer_roundtrips_through_python_reader(tmp_path):
         assert back[i] == want
 
 
+def test_writer_resolves_named_type_defined_in_untaken_branch(tmp_path):
+    """A named type defined inside a ``["null", P]`` union branch the
+    value does not take, and referenced by name later, still encodes:
+    the writer registers every definition before the first value."""
+    schema = {
+        "type": "record", "name": "R", "fields": [
+            {"name": "first", "type": ["null", {
+                "type": "record", "name": "P",
+                "fields": [{"name": "x", "type": "long"}]}]},
+            {"name": "later", "type": "P"},
+            {"name": "more", "type": {"type": "array", "items": "P"}},
+        ],
+    }
+    rows = [
+        {"first": None, "later": {"x": 1}, "more": [{"x": 2}]},
+        {"first": {"x": 3}, "later": {"x": 4}, "more": []},
+    ]
+    p = str(tmp_path / "named.avro")
+    avro_codec.write_avro_file(p, json.dumps(schema), rows)
+    assert ref.read_records(p) == rows
+    assert avro_codec.read_avro_file(p) == rows
+
+
 def test_python_writer_readable_by_jvm(spark, tmp_path):
     """Cross-engine conformance in the OTHER direction: files this
     writer produces must parse in the reference implementation."""

@@ -115,6 +115,14 @@ def test_time_travel_by_version(spark, delta_table):
     assert v1 == {(1, 10), (2, 10), (3, 20), (4, 10)}
 
 
+def test_time_travel_past_head_raises(spark, delta_table):
+    """A version the log does not hold yet is an error, never a silent
+    read of the latest state (the log here ends at version 2)."""
+    with pytest.raises(ValueError, match="version 3 not available"):
+        dr.read_delta(spark, delta_table, version=3)
+    assert dr.read_delta(spark, delta_table, version=2).count() == 3
+
+
 def test_history_newest_first(delta_table):
     hist = dr.delta_history(delta_table)
     assert [h["version"] for h in hist] == [2, 1, 0]
@@ -187,17 +195,3 @@ def test_checkpoint_replay(spark, delta_table):
 
     rows = {(r.id, r.part) for r in dr.read_delta(spark, delta_table).collect()}
     assert rows == {(1, 10), (2, 10), (4, 10)}  # v2 remove applied
-
-
-def test_open_table_refuses_delta_without_runtime(spark, delta_table):
-    from dst_spark_k8_lakehouse_spark.plans.delta_backend import (
-        delta_available,
-        open_table,
-        read_existing_delta,
-    )
-
-    if delta_available():
-        pytest.skip("delta runtime present; refusal path not reachable")
-    with pytest.raises(ValueError, match="read_existing_delta"):
-        open_table(spark, delta_table)
-    assert read_existing_delta(spark, delta_table).count() == 3

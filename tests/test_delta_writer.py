@@ -73,11 +73,10 @@ def test_append_schema_mismatch_refused(spark, tmp_path):
 
 
 def test_writer_output_readable_by_versioned_surface(spark, tmp_path):
-    """read_existing_delta (the public entry) consumes writer output."""
-    from dst_spark_k8_lakehouse_spark.plans.delta_backend import (
-        read_existing_delta,
-    )
+    """read_delta and the VersionedTable handle consume writer output."""
+    from dst_spark_k8_lakehouse_spark.plans import VersionedTable
 
     table = str(tmp_path / "surf")
     dw.create_delta(spark.range(4), table)
-    assert read_existing_delta(spark, table).count() == 4
+    assert dr.read_delta(spark, table).count() == 4
+    assert VersionedTable(spark, table).read().count() == 4

@@ -902,3 +902,22 @@ def test_to_pv_domain_parses_string_literals():
         datetime.datetime(2024, 1, 3, 0, 0, 30), "timestamp"
     ) == us
     assert to_pv_domain(7, "int") == 7
+
+
+def test_module_import_leaves_pandas_unloaded():
+    """Importing the transforms (every pruned plan of either format
+    does) must not load pandas; only building a bucket UDF does."""
+    import subprocess
+    import sys
+    from pathlib import Path
+
+    code = (
+        "import sys\n"
+        "import dst_spark_k8_lakehouse_spark.plans.iceberg_transforms\n"
+        "print('pandas' in sys.modules)\n"
+    )
+    out = subprocess.run(
+        [sys.executable, "-c", code], capture_output=True, text=True,
+        cwd=Path(__file__).resolve().parents[1], check=True,
+    )
+    assert out.stdout.strip() == "False", out.stderr

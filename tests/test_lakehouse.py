@@ -1,6 +1,6 @@
 """Lakehouse-layer tests: the reference's 02_iceberg_demo / 03_delta_demo
 flows (DDL, DML, time travel, schema evolution, VACUUM) reproduced over
-the parquet VersionedTable + session-catalog DDL."""
+the Delta-backed VersionedTable + session-catalog DDL."""
 
 from __future__ import annotations
 
@@ -10,6 +10,11 @@ import pytest
 from pyspark.sql import Row, functions as F
 
 from dst_spark_k8_lakehouse_spark.plans import VersionedTable, ddl, dml
+from dst_spark_k8_lakehouse_spark.plans.delta_reader import plan_file_list
+
+
+def _live(t, version=None) -> set[str]:
+    return set(plan_file_list(t.spark, t.path, version=version)["files"])
 
 
 @pytest.fixture()
@@ -76,10 +81,16 @@ def test_metadata_only_rename(spark, vt):
 
 def test_history_and_vacuum(spark, vt):
     vt.overwrite(spark.createDataFrame([Row(id=7, name="eve", bal=1.0)]))
-    hist = {r.version: r.operation for r in vt.history().collect()}
-    assert hist == {0: "CREATE", 1: "OVERWRITE"}
+    hist = {
+        r.version: (r.operation, r.n_files) for r in vt.history().collect()
+    }
+    assert hist == {
+        0: ("CREATE TABLE AS SELECT", len(_live(vt, 0))),
+        1: ("WRITE", len(_live(vt, 1))),
+    }
+    created, latest = _live(vt, 0), _live(vt)
     removed = vt.vacuum(retain_last=1)
-    assert len(removed) == 1  # the CREATE snapshot's files
+    assert set(removed) == created - latest  # exactly the CREATE's files
     assert vt.read().count() == 1  # latest unaffected
 
 
@@ -155,82 +166,26 @@ def test_partitioned_table_prunes(spark, tmp_path):
         ddl.drop_table(spark, "default.events_p")
 
 
-def test_open_table_backend_selection(spark, tmp_path):
-    """open_table returns the parquet-native VersionedTable when
-    delta-spark is absent, and the two backends expose the same call
-    surface (so call sites are backend-agnostic)."""
-    from dst_spark_k8_lakehouse_spark.plans import (
-        DeltaBackedTable,
-        VersionedTable,
-        delta_available,
-        open_table,
-    )
-
-    import inspect
-
-    t = open_table(spark, str(tmp_path / "t"))
-    expected = DeltaBackedTable if delta_available() else VersionedTable
-    assert isinstance(t, expected)
-    # call-site compatibility: same parameter names for the shared
-    # surface (not just method existence) — a signature drift between
-    # backends breaks the open_table contract silently
-    for method in (
-        "create", "append", "overwrite", "read", "update", "delete",
-        "merge", "history", "committed_props", "latest_prop", "zorder",
-    ):
-        pv = list(inspect.signature(getattr(VersionedTable, method)).parameters)
-        pd_ = list(inspect.signature(getattr(DeltaBackedTable, method)).parameters)
-        assert pv == pd_, f"{method}: {pv} != {pd_}"
-    # vacuum diverges semantically (snapshot-count vs hours) — both
-    # must be keyword-only so a positional number cannot silently
-    # change meaning across backends
-    for cls in (VersionedTable, DeltaBackedTable):
-        params = inspect.signature(cls.vacuum).parameters
-        assert all(
-            p.kind == inspect.Parameter.KEYWORD_ONLY
-            for n, p in params.items() if n != "self"
-        ), cls
-
-
-def test_delta_backend_roundtrip(spark, tmp_path):
-    """Native Delta semantics (03_delta_demo.ipynb:96-189): create,
-    append, time travel, history. Runs only where delta-spark and its
-    jars are installed; this container ships vanilla Spark."""
-    pytest.importorskip("delta")
-    from dst_spark_k8_lakehouse_spark.plans import DeltaBackedTable
-
-    path = str(tmp_path / "dt")
-    t = DeltaBackedTable(spark, path)
-    t.create(spark.range(5).withColumnRenamed("id", "v"))
-    t.append(spark.range(5, 8).withColumnRenamed("id", "v"))
-    assert t.read().count() == 8
-    assert t.read(version=0).count() == 5
-    assert t.history().count() == 2
-    # idempotent stream batch: same txn version commits once
-    batch = spark.range(100, 103).withColumnRenamed("id", "v")
-    t.append(batch, {"stream_batch_id": 7})
-    t.append(batch, {"stream_batch_id": 7})
-    assert t.read().count() == 11
-
-
 def test_drop_column_metadata_only_and_time_travel(spark, tmp_path):
     """DROP COLUMN hides the column without rewriting data; time travel
-    to the pre-drop version still shows it; a post-drop append keeps
-    the drop in effect."""
+    to the pre-drop version still shows it; a post-drop append that
+    carries the name again adds a NEW column, and the pre-drop row
+    reads NULL there, never the dropped bytes."""
     t = VersionedTable(spark, str(tmp_path / "t"))
     t.create(spark.createDataFrame([(1, "a", 10.0)], "id long, name string, secret double"))
+    files = _live(t)
     v = t.drop_column("secret")
+    assert _live(t) == files  # metadata-only: no data file rewritten
     assert "secret" not in t.read().columns
     assert "secret" in t.read(version=v - 1).columns  # time travel
-    t.append(spark.createDataFrame([(2, "b", 20.0)], "id long, name string, secret double"))
-    assert "secret" not in t.read().columns
-    assert t.read().count() == 2
     with pytest.raises(ValueError):
-        t.drop_column("secret")
-    # unknown column: must raise (Iceberg behavior), not commit a
-    # silent drop that would hide a future schema-merged column
-    with pytest.raises(ValueError, match="unknown column"):
+        t.drop_column("secret")  # already dropped
+    # unknown column: must raise, not commit a silent drop
+    with pytest.raises(ValueError, match="no column 'secrt'"):
         t.drop_column("secrt")
+    t.append(spark.createDataFrame([(2, "b", 20.0)], "id long, name string, secret double"))
+    got = {r.id: r.secret for r in t.read().collect()}
+    assert got == {1: None, 2: 20.0}
 
 
 def test_latest_prop_wins_over_history(spark, tmp_path):
@@ -246,32 +201,37 @@ def test_latest_prop_wins_over_history(spark, tmp_path):
 
 
 def test_files_metadata_table(spark, tmp_path):
-    """files() lists one row per live data dir with real sizes, and
-    tracks time travel."""
+    """files() lists one row per live data file with its real size,
+    and tracks time travel."""
     t = VersionedTable(spark, str(tmp_path / "t"))
     t.create(spark.range(10).coalesce(1))
     t.append(spark.range(5).coalesce(1))
     f = t.files().collect()
-    assert len(f) == 2  # create dir + append dir
-    assert all(r.n_parquet_files >= 1 and r.bytes > 0 for r in f)
+    assert len(f) == 2  # create file + append file
+    assert all(
+        r.bytes == os.path.getsize(os.path.join(t.path, r.path)) > 0
+        for r in f
+    )
     assert len(t.files(version=0).collect()) == 1
 
 
 def test_compact_collapses_snapshot_dirs(spark, tmp_path):
-    """Compaction rewrites N per-append dirs into one, preserving rows
-    and time travel; vacuum afterwards reclaims the old dirs."""
+    """Compaction rewrites N per-append files into one, preserving rows
+    and time travel; vacuum afterwards reclaims exactly the old files."""
     t = VersionedTable(spark, str(tmp_path / "t"))
     t.create(spark.range(10).coalesce(1))
     t.append(spark.range(10, 15).coalesce(1))
     t.append(spark.range(15, 18).coalesce(1))
     assert t.files().count() == 3
+    before = _live(t)
     v = t.compact()
     assert t.files().count() == 1
     assert t.read().count() == 18
     assert t.read(version=v - 1).count() == 18  # pre-compact still reads
-    assert "COMPACT" in {r.operation for r in t.history().collect()}
+    assert "OPTIMIZE" in {r.operation for r in t.history().collect()}
     removed = t.vacuum(retain_last=1)
-    assert len(removed) == 3  # the pre-compaction dirs are reclaimed
+    assert set(removed) == before  # the pre-compaction files are reclaimed
+    assert len(removed) == 3
     assert t.read().count() == 18
 
 
@@ -298,6 +258,59 @@ def test_vacuum_and_files_validate_arguments(spark, tmp_path):
         t.files(version=-2)
     with pytest.raises(ValueError):
         t.files(version=99)
+
+
+def test_refuses_json_manifest_directory(spark, tmp_path):
+    """A directory in the retired JSON-manifest format (``_manifest.json``
+    without ``_delta_log``) is refused by name, never re-created as a
+    new, empty table."""
+    old = tmp_path / "old_state"
+    old.mkdir()
+    (old / "_manifest.json").write_text("[]")
+    with pytest.raises(ValueError, match="old_state.*rebuild"):
+        VersionedTable(spark, str(old))
+    assert sorted(os.listdir(old)) == ["_manifest.json"]
+
+
+def test_create_or_replace_replaces_schema(spark, tmp_path):
+    """create() on an existing table is createOrReplace: one overwrite
+    commit whose schema is the new frame's; the old schema stays
+    readable by time travel."""
+    t = VersionedTable(spark, str(tmp_path / "t"))
+    t.create(spark.createDataFrame([(1, "a")], "id long, name string"))
+    v = t.create(spark.createDataFrame([(2.5,)], "score double"))
+    assert v == 1
+    assert t.read().columns == ["score"]
+    assert [r.score for r in t.read().collect()] == [2.5]
+    assert t.read(version=0).columns == ["id", "name"]
+
+
+def test_props_ride_in_commit_user_metadata(spark, tmp_path):
+    """props are the commit's ``commitInfo.userMetadata``; a commit
+    without props carries none."""
+    from dst_spark_k8_lakehouse_spark.plans.delta_reader import delta_history
+
+    t = VersionedTable(spark, str(tmp_path / "t"))
+    t.create(spark.range(3), props={"ivf_n_cells": 8})
+    t.append(spark.range(3, 5))
+    hist = {h["version"]: h.get("userMetadata") for h in delta_history(t.path)}
+    assert hist == {0: '{"ivf_n_cells": 8}', 1: None}
+
+
+def test_dml_on_renamed_table_raises(spark, vt):
+    """Row-level DML reads files by logical name; after a rename the
+    files carry physical names, so UPDATE/DELETE/MERGE refuse loudly
+    instead of matching the wrong columns."""
+    vt.rename_column("bal", "balance")
+    src = spark.createDataFrame([Row(id=1, name="a", balance=1.0)])
+    for op in (
+        lambda: vt.update("id = 1", {"balance": "0"}),
+        lambda: vt.delete("id = 1"),
+        lambda: vt.merge(src, on=["id"]),
+    ):
+        with pytest.raises(NotImplementedError, match="column-mapped"):
+            op()
+    assert vt.read().count() == 2
 
 
 # --- SQL-string DML shim (plans/dml.py) --------------------------------
@@ -465,7 +478,7 @@ def test_zorder_clusters_both_dimensions(spark, tmp_path):
     t = VersionedTable(spark, str(tmp_path / "zt"))
     t.create(df)
     v = t.zorder(["a", "b"], n_files=8)
-    assert t.history().filter("operation = 'ZORDER'").count() == 1
+    assert t.history().filter("operation = 'OPTIMIZE ZORDER'").count() == 1
     back = t.read(v).select(
         "a", "b", F.input_file_name().alias("f")
     )

@@ -146,6 +146,29 @@ def test_logger_batches_across_flushes(spark, tmp_path):
     assert table.history().count() == 1
 
 
+def test_logger_extra_map_roundtrips_through_delta_log(spark, tmp_path):
+    """The ``extra`` map<string,string> column survives flush → Delta
+    log → read, across a create and an append, and the schema read
+    back is METRICS_SCHEMA."""
+    from dst_spark_k8_lakehouse_spark.plans import delta_reader
+
+    path = str(tmp_path / "activity_log")
+    logger = MetricsLogger(spark, table_path=path)
+    extras = [{"k": "v", "unicode": "å"}, {}, {"empty": ""}]
+    for i, extra in enumerate(extras):
+        logger.log_metric(
+            layer=1, project="p", dataset_year=2024, description=f"m{i}",
+            value=i, unit="rows", function="count", extra=extra,
+        )
+        logger.flush()  # first flush creates, the rest append
+    assert delta_reader.is_delta_table(path)
+    table = VersionedTable(spark, path)
+    assert table.read().schema == METRICS_SCHEMA
+    got = {r.description: r.extra for r in table.read().collect()}
+    assert got == {f"m{i}": e for i, e in enumerate(extras)}
+    assert table.read(version=0).count() == 1
+
+
 def test_helpers(spark, customers_raw, tmp_path):
     from pyspark.sql import functions as F
 

@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 from dst_spark_k8_lakehouse_spark.plans import iceberg_reader as ir
 from dst_spark_k8_lakehouse_spark.plans import iceberg_writer as iw
 from dst_spark_k8_lakehouse_spark.plans import puffin
+from tests import puffin_reference
 
 
 # ------------------------------------------------------------- container
@@ -120,7 +121,7 @@ def test_single_pass_equals_per_column(spark):
         F.date_from_unix_date((F.col("id") % 3).cast("int")).alias("d"),
     ).repartition(7)
     fast = puffin.compute_column_sketches(df, ["a", "b", "c", "d"], k=256)
-    slow = puffin.compute_column_sketches_per_column(
+    slow = puffin_reference.compute_column_sketches_per_column(
         df, ["a", "b", "c", "d"], k=256
     )
     assert fast == slow

@@ -6,6 +6,8 @@ separately via t1/t2/t3 in streaming/windows.py."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -164,13 +166,13 @@ def test_foreach_batch_versioned_table_sink(spark, events_dir, tmp_path):
     assert table.read().count() == total
     hist = table.history().collect()
     assert len(hist) >= 1  # >=1 snapshot; multiple if several micro-batches
-    assert {r.operation for r in hist} <= {"CREATE", "APPEND"}
+    assert {r.operation for r in hist} <= {"CREATE TABLE AS SELECT", "WRITE"}
 
 
 def test_stream_batch_retry_is_idempotent(spark, tmp_path):
     """A micro-batch replayed after a crash between the table commit
-    and the checkpoint commit must not duplicate rows: the snapshot
-    records stream_batch_id and the retry is skipped."""
+    and the checkpoint commit must not duplicate rows: the commit
+    records the batch in Delta's txn action and the retry is skipped."""
     from dst_spark_k8_lakehouse_spark.plans import VersionedTable
 
     path = str(tmp_path / "t")
@@ -182,6 +184,26 @@ def test_stream_batch_retry_is_idempotent(spark, tmp_path):
     table = VersionedTable(spark, path)
     assert table.read().count() == 20
     assert table.history().count() == 2
+
+
+def test_stream_batch_retry_survives_checkpoint(spark, tmp_path):
+    """The txn watermark lives in the Delta log, so it survives a
+    checkpoint that folds the JSON commits: retries of batches 0 and 1
+    after ``write_checkpoint`` are still skipped, batch 2 lands."""
+    from dst_spark_k8_lakehouse_spark.plans import VersionedTable, delta_writer
+
+    path = str(tmp_path / "t")
+    batch = spark.range(10).withColumnRenamed("id", "v")
+    assert pipelines.write_stream_batch_to_table(batch, 0, path) is True
+    assert pipelines.write_stream_batch_to_table(batch, 1, path) is True
+    delta_writer.write_checkpoint(spark, path)
+    for log in os.listdir(os.path.join(path, "_delta_log")):
+        if log.endswith(".json") and log[:-5].isdigit():
+            os.remove(os.path.join(path, "_delta_log", log))  # checkpoint only
+    assert pipelines.write_stream_batch_to_table(batch, 0, path) is False
+    assert pipelines.write_stream_batch_to_table(batch, 1, path) is False
+    assert pipelines.write_stream_batch_to_table(batch, 2, path) is True
+    assert VersionedTable(spark, path).read().count() == 30
 
 
 def test_kafka_wire_parse_roundtrip(spark, events_dir):
