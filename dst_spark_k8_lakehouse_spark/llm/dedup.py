@@ -10,11 +10,9 @@ removal on a key (``06_pipeline_metrics_demo.ipynb:245-264``,
 - **MinHash+LSH** (L2): shingle → minhash signature → banded LSH
   bucketing → candidate pairs → exact-Jaccard verification → connected-
   component clustering → one representative per cluster. The signature
-  stage is size-switched between an all-JVM codegen spelling (small
-  inputs — the mapInArrow boundary dominates there) and the numpy
-  Arrow-batch stage (large inputs — vectorized compute, boundary
-  amortized; the 100 TB branch), bit-identical by test — see
-  ``signature_table``. Candidate generation is linear in corpus size (explode
+  stage is one numpy Arrow-batch ``mapInArrow`` kernel whose Python
+  ``str.lower().split()`` tokenizer defines the persisted signatures —
+  see ``signature_table``. Candidate generation is linear in corpus size (explode
   b bands/doc, shuffle on band signature); only the verify step touches
   pairs, and only within-bucket pairs ever materialize. Signatures are
   persistable (``signature_table``) for incremental ingest
@@ -190,7 +188,8 @@ def _minhash_batch_fn(num_hashes: int, shingle_n: int):
       1.75 s → 1.07 s at sf0.1 (round-4 environment).
     - Tokenization moved Python-side with it: one string per doc
       crosses Arrow instead of an ``array<string>``, and vectorized
-      ``Series.str`` handles lower/strip/split.
+      ``Series.str`` handles lower/split (``str.split()`` with no
+      argument already drops edge whitespace).
 
     Everything is deterministic (crc32 + fixed (a_i, b_i) universal
     hashes, h_i(x) = (a_i·x + b_i) mod P — MMDS ch.3), so signatures
@@ -210,13 +209,7 @@ def _minhash_batch_fn(num_hashes: int, shingle_n: int):
         A = np.asarray(a, dtype=np.int64)[:, None]
         B = np.asarray(b, dtype=np.int64)[:, None]
         for batch in batches:
-            toks = (
-                batch.column("text")
-                .to_pandas()
-                .str.lower()
-                .str.strip()
-                .str.split()
-            )
+            toks = batch.column("text").to_pandas().str.lower().str.split()
             mhs: list = []
             shs: list = []
             for tk in toks:
@@ -255,81 +248,6 @@ def _minhash_batch_fn(num_hashes: int, shingle_n: int):
     return gen
 
 
-# Size switch for the signature stage, in CATALYST-ESTIMATED INPUT
-# BYTES (``_plan_size_bytes`` — no job). Below it, an all-JVM codegen
-# spelling of the same computation wins: the mapInArrow boundary is a
-# fixed ~0.25-0.40 s per pass locally (an IDENTITY mapInArrow over the
-# same rows costs that much) while the JVM explode+crc32+aggregate
-# pipeline has no boundary at all. Above it, the numpy batch stage
-# wins: its per-task boundary cost is amortized over large batches and
-# one vectorized permutation-min per doc beats the row-at-a-time
-# aggregate update (measured interleaved in one JVM: sf0.1
-# (3.3 MB est) JVM 0.26 s vs Arrow 0.35 s; replicated sf1 (53 MB est)
-# Arrow 1.44 s vs JVM 2.17 s — the two spellings CROSS between those
-# sizes; 16 MB splits the measured interval). Both branches are
-# BIT-IDENTICAL by construction and by test
-# (``test_dedup_properties.test_signature_branches_bit_identical``),
-# so the switch can never change which signatures a corpus gets and
-# persisted SIG_VERSION=2 state is valid regardless of the branch that
-# wrote it.
-CODEGEN_SIG_MAX_BYTES = 16 << 20
-
-
-def _sigs_arrow(base: DataFrame, num_hashes: int, shingle_n: int) -> DataFrame:
-    """Arrow-batch spelling: numpy minhash in ``mapInArrow`` — the
-    100 TB branch (vectorized native compute per batch, guide §4.2)."""
-    return base.select("doc_id", "text").mapInArrow(
-        _minhash_batch_fn(num_hashes, shingle_n),
-        "doc_id bigint, mh array<bigint>, shash array<bigint>",
-    ).filter(F.size("shash") > 0)
-
-
-def _sigs_codegen(base: DataFrame, num_hashes: int, shingle_n: int) -> DataFrame:
-    """All-JVM codegen spelling: explode one row per shingle via a
-    ``sequence`` index (the token array is never the generator input —
-    ``InferFiltersFromGenerate`` would re-inline the split), hash with
-    the built-in ``crc32``, then ONE aggregate computes every
-    permutation min plus ``sort_array(collect_set(hv))`` (≡
-    ``np.unique``). The aggregate's partial+final pair rides the
-    spread exchange — the shuffle moves ~1 row per doc per input
-    partition, never the exploded shingles. Tokenization parity: the
-    regex edge-strip + ``\\s+`` split matches Python ``str.split()``
-    for ASCII whitespace (exotic Unicode spaces would diverge — absent
-    from the corpus and from any signature state this engine wrote).
-    """
-    a, b = _perm_constants(num_hashes)
-    toks = base.select(
-        "doc_id",
-        F.split(
-            F.regexp_replace(F.lower("text"), r"^\s+|\s+$", ""), r"\s+"
-        ).alias("tk"),
-    ).filter(F.size("tk") >= shingle_n)
-    shingle = F.concat_ws(
-        " ", *[F.element_at("tk", F.col("i") + j) for j in range(shingle_n)]
-    )
-    sh = toks.select(
-        "doc_id",
-        "tk",
-        F.explode(
-            F.sequence(F.lit(1), F.size("tk") - (shingle_n - 1))
-        ).alias("i"),
-    ).select("doc_id", F.crc32(F.encode(shingle, "utf-8")).alias("hv"))
-    hr = F.col("hv") % _MINHASH_P
-    mins = [
-        F.min((F.lit(ai) * hr + F.lit(bi)) % _MINHASH_P).alias(f"_m{i}")
-        for i, (ai, bi) in enumerate(zip(a, b))
-    ]
-    return (
-        sh.groupBy("doc_id")
-        .agg(F.sort_array(F.collect_set("hv")).alias("shash"), *mins)
-        .select(
-            "doc_id",
-            F.array(*[f"_m{i}" for i in range(num_hashes)]).alias("mh"),
-            "shash",
-        )
-    )
-
-
 def signature_table(
     docs: DataFrame,
     num_hashes: int = 32,
@@ -345,22 +263,23 @@ def signature_table(
     local-parallelism repartition — REQUIRED when ``docs`` has shuffle
     stages upstream (see ``_spread_for_python``).
 
-    Two BIT-IDENTICAL spellings, size-switched on the input's Catalyst
-    estimate (the ``l4_cosine_topk`` HOF-vs-GEMM pattern — see
-    ``CODEGEN_SIG_MAX_BYTES`` for the measured crossover): small
-    inputs take the all-JVM codegen pipeline (``_sigs_codegen`` — no
-    Python boundary), large inputs the numpy Arrow-batch stage
-    (``_sigs_arrow`` — boundary amortized, vectorized permutation
-    mins; the branch a 100 TB corpus always takes). A pure array-HOF
+    One spelling at every input size: the numpy Arrow-batch stage
+    (``_minhash_batch_fn`` in ``mapInArrow``), whose Python
+    ``str.lower().split()`` tokenizer is the contract for persisted
+    ``SIG_VERSION`` state — Unicode whitespace, empty text and nulls
+    included (``tests/minhash_reference.py`` is the pure-Python
+    reference it is property-tested against). An all-JVM codegen twin
+    for small inputs was retired: Java ``\\s+`` and Spark ``lower``
+    disagree with Python on non-ASCII text, so one doc could get
+    different signatures at different corpus sizes. A pure array-HOF
     formulation (≈10k interpreted lambda frames per doc) measured ~8 s
-    for 5500 docs and stays retired.
+    for 5500 docs and stays retired too.
     """
-    from dst_spark_k8_lakehouse_spark.llm.similarity import _plan_size_bytes
-
     base = _spread_for_python(docs) if spread else docs
-    if _plan_size_bytes(docs) > CODEGEN_SIG_MAX_BYTES:
-        return _sigs_arrow(base, num_hashes, shingle_n)
-    return _sigs_codegen(base, num_hashes, shingle_n)
+    return base.select("doc_id", "text").mapInArrow(
+        _minhash_batch_fn(num_hashes, shingle_n),
+        "doc_id bigint, mh array<bigint>, shash array<bigint>",
+    ).filter(F.size("shash") > 0)
 
 
 def banded_signatures(
@@ -503,51 +422,30 @@ def candidates_from_sigs(
     """Candidate pairs from an EXISTING signature frame — use this when
     signatures are already materialized (persisted table, checkpoint)
     so the expensive signature stage is not rebuilt per consumer."""
-    banded = banded_signatures(sigs, num_hashes, bands)
-    if max_pairs_bucket is not None:
-        stats = banded.groupBy("band", "sig").agg(
-            F.min("doc_id").alias("hub"), F.count("*").alias("n")
-        )
-        sized = banded.join(stats, ["band", "sig"])
-        small = sized.filter(F.col("n") <= max_pairs_bucket).drop("hub", "n")
-        star = (
-            sized.filter(
-                (F.col("n") > max_pairs_bucket)
-                & (F.col("doc_id") != F.col("hub"))
-            )
-            .select(
-                F.col("hub").alias("doc_a"), F.col("doc_id").alias("doc_b")
-            )
-        )
-        left, right = small.alias("l"), small.alias("r")
-        pairs = (
-            left.join(
-                right,
-                (F.col("l.band") == F.col("r.band"))
-                & (F.col("l.sig") == F.col("r.sig"))
-                & (F.col("l.doc_id") < F.col("r.doc_id")),
-            )
-            .select(
-                F.col("l.doc_id").alias("doc_a"),
-                F.col("r.doc_id").alias("doc_b"),
-            )
-        )
-        return pairs.unionByName(star).distinct()
-    left = banded.alias("l")
-    right = banded.alias("r")
-    return (
-        left.join(
+
+    def self_join(banded: DataFrame) -> DataFrame:
+        left, right = banded.alias("l"), banded.alias("r")
+        return left.join(
             right,
             (F.col("l.band") == F.col("r.band"))
             & (F.col("l.sig") == F.col("r.sig"))
             & (F.col("l.doc_id") < F.col("r.doc_id")),
+        ).select(
+            F.col("l.doc_id").alias("doc_a"), F.col("r.doc_id").alias("doc_b")
         )
-        .select(
-            F.col("l.doc_id").alias("doc_a"),
-            F.col("r.doc_id").alias("doc_b"),
-        )
-        .distinct()
+
+    banded = banded_signatures(sigs, num_hashes, bands)
+    if max_pairs_bucket is None:
+        return self_join(banded).distinct()
+    stats = banded.groupBy("band", "sig").agg(
+        F.min("doc_id").alias("hub"), F.count("*").alias("n")
     )
+    sized = banded.join(stats, ["band", "sig"])
+    small = sized.filter(F.col("n") <= max_pairs_bucket).drop("hub", "n")
+    star = sized.filter(
+        (F.col("n") > max_pairs_bucket) & (F.col("doc_id") != F.col("hub"))
+    ).select(F.col("hub").alias("doc_a"), F.col("doc_id").alias("doc_b"))
+    return self_join(small).unionByName(star).distinct()
 
 
 @query("l2_minhash_lsh")  # rows-only: LSH banding is not SQL-expressible
@@ -570,22 +468,7 @@ def l2_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     # eager=False: materializes at first action (honest timing), then
     # all four plan branches read the stored partitions
     sigs = signature_table(docs).localCheckpoint(eager=False)
-    banded = banded_signatures(sigs)
-    left, right = banded.alias("l"), banded.alias("r")
-    cand = (
-        left.join(
-            right,
-            (F.col("l.band") == F.col("r.band"))
-            & (F.col("l.sig") == F.col("r.sig"))
-            & (F.col("l.doc_id") < F.col("r.doc_id")),
-        )
-        .select(
-            F.col("l.doc_id").alias("doc_a"),
-            F.col("r.doc_id").alias("doc_b"),
-        )
-        .distinct()
-    )
-    return verified_pairs(cand, sigs)
+    return verified_pairs(candidates_from_sigs(sigs), sigs)
 
 
 # Per-process persisted signature tables for the production-flow LSH
@@ -622,22 +505,7 @@ def l2_minhash_lsh_sigs(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB pipeline runs it (signatures written at ingest by
     ``signature_table`` / ``incremental_neardup``)."""
     sigs = _persisted_signatures(spark, sf_dir)
-    banded = banded_signatures(sigs)
-    left, right = banded.alias("l"), banded.alias("r")
-    cand = (
-        left.join(
-            right,
-            (F.col("l.band") == F.col("r.band"))
-            & (F.col("l.sig") == F.col("r.sig"))
-            & (F.col("l.doc_id") < F.col("r.doc_id")),
-        )
-        .select(
-            F.col("l.doc_id").alias("doc_a"),
-            F.col("r.doc_id").alias("doc_b"),
-        )
-        .distinct()
-    )
-    return verified_pairs(cand, sigs)
+    return verified_pairs(candidates_from_sigs(sigs), sigs)
 
 
 @query(
@@ -686,9 +554,8 @@ def l2_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _simhash_batch_fn():
     """Arrow-batch iterator computing 64-bit SimHash per doc, for
-    ``mapInArrow`` (same boundary rationale as ``_minhash_batch_fn``;
-    sha256-per-token has no cheap codegen analog, so unlike the MinHash
-    stage there is no small-input JVM branch).
+    ``mapInArrow`` (same boundary rationale and the same Python
+    ``str.lower().split()`` tokenizer as ``_minhash_batch_fn``).
 
     Charikar's construction: per-token 64-bit hash votes ±1 on each bit;
     the signature is the sign vector. Token hash = first 8 bytes of

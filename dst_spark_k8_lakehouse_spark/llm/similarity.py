@@ -7,7 +7,9 @@ Vectors live in an ``array<float>`` column (``embeddings.embedding``,
   vector, dot-product via higher-order functions (JVM, no Python),
   ``orderBy().limit()`` → ``TakeOrderedAndProject`` (partition-local
   top-k then driver merge of k·partitions candidates — the correct
-  100 TB shape; never a global sort).
+  100 TB shape; never a global sort). One scorer at every corpus size:
+  a numpy-GEMM ``mapInArrow`` twin lost to it at one query and won by
+  under 10% at ten queries (sf1), so it was retired.
 - **IVF** (inverted-file): assign vectors to their nearest centroid
   once (a narrow map + small broadcast join), search only the closest
   ``nprobe`` cells — the scale path: cuts scanned vectors by
@@ -56,6 +58,19 @@ def cosine(a: str, b: str) -> Column:
     return _safe_div(dot(a, b), norm(a) * norm(b))
 
 
+def _query_cosine() -> Column:
+    """1e6-floored cosine of ``embedding`` against a broadcast query
+    ``qv`` whose norm ``qn`` was computed once on the query side — per
+    corpus row only dot + own-norm remain (2 folds, not 3), the same
+    IEEE ops as the oracle's per-row sqrt."""
+    return (
+        F.floor(
+            1e6 * _safe_div(dot("embedding", "qv"), norm("embedding") * F.col("qn"))
+        )
+        / 1e6
+    )
+
+
 @query(
     "l4_cosine_topk",
     oracle="""
@@ -77,46 +92,21 @@ def l4_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """L4: brute-force cosine top-10 against the vec_id=0 query vector.
 
     The 1-row query side rides a broadcast nested-loop join (no
-    shuffle); scoring is one codegen'd pass; top-k is
-    ``TakeOrderedAndProject``. Tiebreak on vec_id keeps the cut
-    deterministic when truncated scores collide.
+    shuffle); scoring is one JVM HOF pass (``_query_cosine``) at every
+    corpus size; top-k is ``TakeOrderedAndProject``. Tiebreak on vec_id
+    keeps the cut deterministic when truncated scores collide.
     """
     emb = load_table(spark, sf_dir, "embeddings")
-    # query norm computed ONCE on the 1-row side before the broadcast —
-    # per corpus row only dot + own-norm remain (2 folds, not 3); same
-    # IEEE ops as the oracle's per-row sqrt, so values still hash-match
     q = emb.filter(F.col("vec_id") == 0).select(
         F.col("embedding").alias("qv"), norm("embedding").alias("qn")
     )
-    corpus = emb.filter(F.col("vec_id") != 0)
-    # above the size switch (1 query × corpus bytes), flip to the
-    # Arrow GEMV path: the per-row interpreted fold is the known
-    # 17×-vs-native compute gap (VERDICT r2/r4) and one numpy GEMM per
-    # batch amortizes it once the corpus is large enough to bury the
-    # Arrow round-trip
-    if _plan_size_bytes(corpus) * 1 >= ARROW_GEMM_MIN_QUERY_BYTES:
-        return batch_topk_arrow(
-            corpus,
-            q.select(F.lit(0).cast("bigint").alias("qid"), "qv", "qn"),
-            k=10,
-            carry=("label",),
-        ).select("vec_id", "label", "cosine")
     return (
-        corpus
+        emb.filter(F.col("vec_id") != 0)
         .crossJoin(F.broadcast(q))
         .select(
             "vec_id",
             "label",
-            (
-                F.floor(
-                    1e6
-                    * _safe_div(
-                        dot("embedding", "qv"),
-                        norm("embedding") * F.col("qn"),
-                    )
-                )
-                / 1e6
-            ).alias("cosine"),
+            _query_cosine().alias("cosine"),
         )
         .orderBy(F.desc("cosine"), "vec_id")
         .limit(10)
@@ -154,174 +144,28 @@ def l4_batch_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     Corpus is scanned once regardless of batch size — at 100 TB the
     scan dominates, so batching divides its cost across all queries.
 
-    Size-switched scoring: small corpora score with the JVM HOF fold
-    (no Python boundary); above ``ARROW_GEMM_MIN_QUERY_BYTES`` (in
-    corpus bytes × batch queries) the scorer flips to
-    ``batch_topk_arrow`` (one numpy GEMM per Arrow batch), which
-    amortizes the Arrow round-trip and wins at sf≥1.
+    Scoring is the same JVM HOF fold as ``l4_cosine_topk`` at every
+    corpus size — no Python boundary, and the oracle's IEEE sequence.
     """
     from pyspark.sql import Window
 
     emb = load_table(spark, sf_dir, "embeddings")
-    # per-query norms computed once on the 10-row broadcast side (see
-    # l4_cosine_topk note)
     q = emb.filter(F.col("vec_id") < 10).select(
         F.col("vec_id").alias("qid"),
         F.col("embedding").alias("qv"),
         norm("embedding").alias("qn"),
     )
-    corpus = emb.filter(F.col("vec_id") >= 10)
-    if _plan_size_bytes(corpus) * 10 >= ARROW_GEMM_MIN_QUERY_BYTES:
-        return batch_topk_arrow(corpus, q, k=3)
     w = Window.partitionBy("qid").orderBy(F.desc("cosine"), F.asc("vec_id"))
     return (
-        corpus.crossJoin(F.broadcast(q))
+        emb.filter(F.col("vec_id") >= 10)
+        .crossJoin(F.broadcast(q))
         .select(
             "qid",
             "vec_id",
-            (
-                F.floor(
-                    1e6
-                    * _safe_div(
-                        dot("embedding", "qv"),
-                        norm("embedding") * F.col("qn"),
-                    )
-                )
-                / 1e6
-            ).alias("cosine"),
+            _query_cosine().alias("cosine"),
         )
         .withColumn("rk", F.row_number().over(w))
         .filter(F.col("rk") <= 3)
-        .drop("rk")
-    )
-
-
-# Switch for the Arrow-GEMM scorer, in CORPUS BYTES × QUERY COUNT:
-# HOF fold cost scales with both the corpus size and the number of
-# queries scored per row, while the Arrow path's dominant cost (the
-# corpus round-trip through Python) scales with corpus size only — so
-# the honest predicate is their product. Calibrated from measured
-# crossovers (sf1 = 5.76 MB estimated corpus): m=10 queries → GEMM
-# 0.41 s vs HOF 0.45 s (57.6 MB·q, above → GEMM wins); m=1 → GEMM
-# 0.50 s vs HOF 0.21 s (5.76 MB·q, below → HOF wins); sf0.1 m=10 →
-# 8 MB·q, below, HOF 0.15 s wins.
-ARROW_GEMM_MIN_QUERY_BYTES = 32 << 20
-
-
-def _plan_size_bytes(df: DataFrame) -> int:
-    """Catalyst's size estimate for a frame — no job, deterministic."""
-    return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-
-
-def _gemm_topk_gen(qids, qmat, qnorms, k: int, carry: tuple[str, ...] = ()):
-    """mapInArrow generator: per Arrow batch, score corpus rows against
-    the whole query matrix with one float64 GEMM, then emit only each
-    query's per-batch top-k (the map-side partial cut — k·m rows per
-    batch cross the shuffle, mirroring WindowGroupLimit). ``carry``
-    names corpus columns to pass through alongside (vec_id, cosine)."""
-
-    def gen(batches):
-        import numpy as np
-        import pyarrow as pa
-
-        Q = np.asarray(qmat, dtype=np.float64)  # m × d
-        qn = np.asarray(qnorms, dtype=np.float64)  # m
-        qid_arr = np.asarray(qids, dtype=np.int64)  # m
-        m = Q.shape[0]
-        for batch in batches:
-            vid = batch.column("vec_id").to_numpy(zero_copy_only=False)
-            col = batch.column("embedding")
-            if isinstance(col, pa.ChunkedArray):
-                col = col.combine_chunks()
-            offs = col.offsets.to_numpy(zero_copy_only=False)
-            widths = np.diff(offs)
-            if len(widths) and (widths != widths[0]).any():
-                raise ValueError("ragged embedding column in GEMM scorer")
-            d = int(widths[0]) if len(widths) else 0
-            C = (
-                col.values.to_numpy(zero_copy_only=False)
-                .astype(np.float64)
-                .reshape(-1, d)
-            )
-            cn = np.sqrt((C * C).sum(axis=1))  # n
-            scores = C @ Q.T  # n × m
-            den = cn[:, None] * qn[None, :]
-            with np.errstate(invalid="ignore", divide="ignore"):
-                cos = np.where(den == 0, 0.0, scores / den)
-            cos = np.floor(1e6 * cos) / 1e6
-            n = C.shape[0]
-            kk = min(k, n)
-            orders = []
-            out_qid: list = []
-            out_vid: list = []
-            out_cos: list = []
-            for j in range(m):
-                # order by (-cosine, vec_id): lexsort keys are applied
-                # last-key-primary
-                order = np.lexsort((vid, -cos[:, j]))[:kk]
-                orders.append(order)
-                out_qid.append(np.full(kk, qid_arr[j], dtype=np.int64))
-                out_vid.append(vid[order].astype(np.int64))
-                out_cos.append(cos[order, j])
-            arrays = [
-                pa.array(np.concatenate(out_qid), type=pa.int64()),
-                pa.array(np.concatenate(out_vid), type=pa.int64()),
-            ]
-            names = ["qid", "vec_id"]
-            take = pa.array(
-                np.concatenate(orders).astype(np.int64)
-                if orders
-                else np.array([], dtype=np.int64)
-            )
-            for c in carry:
-                arrays.append(batch.column(c).take(take))
-                names.append(c)
-            arrays.append(
-                pa.array(np.concatenate(out_cos), type=pa.float64())
-            )
-            names.append("cosine")
-            yield pa.RecordBatch.from_arrays(arrays, names=names)
-
-    return gen
-
-
-def batch_topk_arrow(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int,
-    carry: tuple[str, ...] = (),
-) -> DataFrame:
-    """Arrow-GEMM formulation of batched top-k: the query batch (tiny
-    by contract — it broadcasts in the HOF path too) is collected to a
-    numpy matrix, each corpus Arrow batch is scored with one float64
-    GEMM, and only per-batch top-k survivors reach the final
-    per-query cut. Same result as the HOF path: float64 scoring,
-    1e-6 floor truncation, (cosine DESC, vec_id ASC) tiebreak.
-
-    The one numerical caveat: numpy's pairwise summation can differ
-    from a left-to-right fold in the last ulp; the 1e-6 floor
-    truncation absorbs it everywhere a boundary isn't hit exactly
-    (value-hash-checked against the same oracle as the HOF path)."""
-    from pyspark.sql import Window
-
-    qrows = queries.select("qid", "qv", "qn").collect()
-    gen = _gemm_topk_gen(
-        [r.qid for r in qrows],
-        [list(r.qv) for r in qrows],
-        [r.qn for r in qrows],
-        k,
-        carry,
-    )
-    carry_schema = "".join(
-        f", {c} {corpus.schema[c].dataType.simpleString()}" for c in carry
-    )
-    scored = corpus.select("vec_id", "embedding", *carry).mapInArrow(
-        gen, f"qid bigint, vec_id bigint{carry_schema}, cosine double"
-    )
-    w = Window.partitionBy("qid").orderBy(F.desc("cosine"), F.asc("vec_id"))
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
         .drop("rk")
     )
 
@@ -649,16 +493,7 @@ def l4_quant_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         deq.crossJoin(F.broadcast(q))
         .select(
             "vec_id",
-            (
-                F.floor(
-                    1e6
-                    * _safe_div(
-                        dot("embedding", "qv"),
-                        norm("embedding") * F.col("qn"),
-                    )
-                )
-                / 1e6
-            ).alias("cosine"),
+            _query_cosine().alias("cosine"),
         )
         .orderBy(F.desc("cosine"), "vec_id")
         .limit(10)

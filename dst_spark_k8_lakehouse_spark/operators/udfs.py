@@ -34,10 +34,12 @@ from dst_spark_k8_lakehouse_spark.sources.catalog import load_table
     """,
 )
 def u4_udf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """U4: scalar Python UDF (row-at-a-time; API-parity demo only)."""
+    """U4: scalar Python UDF (row-at-a-time; API-parity demo only).
+    ``tier`` carries no type hints: under postponed annotations PySpark
+    cannot read them and warns on every build."""
 
     @F.udf(T.StringType())
-    def tier(acctbal: float) -> str:
+    def tier(acctbal):
         if acctbal < 0:
             return "debt"
         if acctbal < 5000:

@@ -55,6 +55,18 @@ def query(query_id: str, oracle: str | None = None) -> Callable[[F], F]:
 # ids whose only green row is the oldest (round 1). Rotation log with
 # last-green round per id lives in COVERAGE.md.
 PRIORITY: list[str] = [
+    # (b) builders on the one-spelling MinHash signature stage (always
+    # mapInArrow) and band self-join, and on the one HOF cosine scorer:
+    "l2_minhash_lsh",
+    "l2_minhash_lsh_sigs",
+    "l2_minhash_recall",
+    "l7_fuzzy_decontam",
+    "l7_fuzzy_recall",
+    "l4_cosine_topk",
+    "l4_batch_topk",
+    "l4_ivf_recall",  # rides l4_cosine_topk
+    "l4_quant_recall",  # rides l4_cosine_topk and its scorer
+    "u4_udf",  # changed: UDF without type hints
     # (b) builders that now reach Delta through VersionedTable:
     "d10_update_sql",
     "d11_delete_sql",
@@ -124,10 +136,9 @@ PRIORITY: list[str] = [
     # named in VERDICT r12 item 2's done-criteria):
     "l6_mixture_epochs",
     "l2_embed_recall",
-    "l4_ivf_recall",
     "l3_langid",
     "l3_langid_eval",
-    # (the six (b) ids above push the last six past a 50-id cap)
+    # (the (b) ids above push the tail of this list past a 50-id cap)
     # 50 exactly (the three NEW r13 oracle ids — s13_kafka_group_
     # resume, t12_stateful_running_agg, t13_sessionize — took the
     # slots of s8_range, s1_parquet_scan and a1_count: trivial r07

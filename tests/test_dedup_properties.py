@@ -1,22 +1,47 @@
 """Property-based tests (hypothesis) for the dedup layer: signature
-determinism under repartitioning, exact-dedup idempotence, and chunking
+determinism under repartitioning, signatures equal to the pure-Python
+reference on hostile text, exact-dedup idempotence, and chunking
 coverage on arbitrary generated documents — invariants the fixed
 testdata can't probe."""
 
 from __future__ import annotations
 
 import pytest
-from hypothesis import given, settings, strategies as st
+from hypothesis import example, given, settings, strategies as st
 from pyspark.sql import functions as F
 
 from dst_spark_k8_lakehouse_spark import registry
 from dst_spark_k8_lakehouse_spark.llm import curation, dedup
+from dst_spark_k8_lakehouse_spark.localrel import local_frame
+from tests import minhash_reference
 
 registry.load_all()
 
-# words: lowercase tokens so the single-space/regex tokenizers agree
-word = st.text(alphabet="abcdefgh", min_size=1, max_size=6)
+# words: mixed-case, non-ASCII letters, no whitespace — a " "-joined doc
+# splits back into exactly its words under every tokenizer here
+word = st.text(alphabet="abcdefghXYZéΣİẞA", min_size=1, max_size=6)
 doc = st.lists(word, min_size=0, max_size=30).map(" ".join)
+
+# hostile text for the persisted-signature contract: every Python
+# str.split() whitespace character, including those Java's \s does not
+# match (NBSP, Unicode spaces, line and paragraph separators, the
+# \x1c-\x1f separators); case mappings that change length or depend on
+# context; whitespace-only and empty strings; nulls
+WHITESPACE = (
+    " \t\n\r\x0b\x0c\x1c\x1d\x1e\x1f\x85\xa0\u1680"
+    + "".join(chr(c) for c in range(0x2000, 0x200B))
+    + "\u2028\u2029\u202f\u205f\u3000"
+)
+gap = st.text(alphabet=WHITESPACE, min_size=1, max_size=2)
+hostile_word = st.text(alphabet="abcdeXYZΣİẞA", min_size=1, max_size=4)
+hostile_doc = st.one_of(
+    st.none(),
+    st.just(""),
+    gap,
+    st.lists(st.tuples(gap, hostile_word), max_size=8).map(
+        lambda parts: "".join(g + w for g, w in parts)
+    ),
+)
 
 
 def _docs_df(spark, texts, n_parts):
@@ -174,22 +199,27 @@ def test_quantization_roundtrip_error_bound_property(spark, vecs):
 
 
 @pytest.mark.usefixtures("spark")
-@settings(max_examples=10, deadline=None)
-@given(texts=st.lists(doc, min_size=1, max_size=12))
-def test_signature_branches_bit_identical(spark, texts):
-    """The size-switched signature spellings (_sigs_codegen JVM branch
-    vs _sigs_arrow numpy branch) must agree doc-by-doc on BOTH the
-    minhash signature and the shingle-hash set for arbitrary texts —
-    the contract that makes CODEGEN_SIG_MAX_BYTES a pure performance
-    switch (persisted SIG_VERSION state stays valid whichever branch
-    wrote it)."""
-    base = _docs_df(spark, texts, 2)
-    a = {
+@settings(max_examples=15, deadline=None)
+@given(
+    texts=st.lists(hostile_doc, min_size=1, max_size=12),
+    n_parts=st.integers(1, 3),
+)
+@example(texts=["a\xa0b c d"], n_parts=1)
+@example(texts=["", None, "two tokens", "one two three"], n_parts=2)
+def test_signature_table_matches_reference(spark, texts, n_parts):
+    """``signature_table`` rows are persisted SIG_VERSION state: on
+    hostile text (Unicode whitespace, case mappings, empty strings,
+    nulls) they must equal the pure-Python reference doc by doc — the
+    same docs dropped (fewer than 3 tokens), the same minhash signature
+    and the same shingle-hash set, at any input size or partitioning.
+    The docs are a ``LocalRelation``, so Catalyst knows their (tiny)
+    size, as it does for a real small table."""
+    docs = local_frame(
+        spark, list(enumerate(texts)), "doc_id long, text string"
+    ).repartition(n_parts)
+    got = {
         r.doc_id: (tuple(r.mh), tuple(r.shash))
-        for r in dedup._sigs_codegen(base, 32, 3).collect()
+        for r in dedup.signature_table(docs).collect()
     }
-    b = {
-        r.doc_id: (tuple(r.mh), tuple(r.shash))
-        for r in dedup._sigs_arrow(base, 32, 3).collect()
-    }
-    assert a == b
+    want = {i: minhash_reference.signature(t) for i, t in enumerate(texts)}
+    assert got == {i: sig for i, sig in want.items() if sig is not None}

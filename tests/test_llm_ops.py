@@ -110,53 +110,6 @@ def test_ann_ivf_recall_vs_brute_force(spark, sf_dir):
     )
 
 
-def test_batch_topk_arrow_matches_hof(spark, sf_dir):
-    """The size-switched Arrow-GEMM scorer must reproduce the HOF
-    formulation's rows exactly (same float64 math, same 1e-6 floor,
-    same (cosine DESC, vec_id ASC) tiebreak) — the switch may never
-    change answers, only plans."""
-    from dst_spark_k8_lakehouse_spark.llm import similarity as S
-    from dst_spark_k8_lakehouse_spark.sources.catalog import load_table
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    q = emb.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("qid"),
-        F.col("embedding").alias("qv"),
-        S.norm("embedding").alias("qn"),
-    )
-    corpus = emb.filter(F.col("vec_id") >= 10)
-    arrow = sorted(map(tuple, S.batch_topk_arrow(corpus, q, 3).collect()))
-    # registry path at test SF sits below the switch → HOF formulation
-    hof = sorted(
-        map(tuple, registry.QUERIES["l4_batch_topk"](spark, sf_dir).collect())
-    )
-    assert arrow == hof
-    assert len(arrow) == 30
-    # the single-query GEMV shape with a carried passthrough column
-    # must equal l4_cosine_topk's HOF result (also below the switch)
-    q1 = emb.filter(F.col("vec_id") == 0).select(
-        F.lit(0).cast("bigint").alias("qid"),
-        F.col("embedding").alias("qv"),
-        S.norm("embedding").alias("qn"),
-    )
-    gemv = sorted(
-        map(
-            tuple,
-            S.batch_topk_arrow(
-                emb.filter(F.col("vec_id") != 0), q1, 10, carry=("label",)
-            )
-            .select("vec_id", "label", "cosine")
-            .collect(),
-        )
-    )
-    cos_hof = sorted(
-        map(
-            tuple, registry.QUERIES["l4_cosine_topk"](spark, sf_dir).collect()
-        )
-    )
-    assert gemv == cos_hof
-
-
 def test_langid_beats_chance_on_english(spark, sf_dir):
     """The corpus text is English-ish word soup regardless of label, so
     the scorer should call almost everything 'en' — verifying the scoring

@@ -32,6 +32,17 @@ def test_rows_only_query_runs(qid, spark, sf_dir):
     assert rows is not None
 
 
+def test_u4_udf_builds_without_warnings(spark, sf_dir):
+    """Building ``u4_udf`` must not warn: type hints on a ``@F.udf``
+    function under postponed annotations make PySpark warn "Cannot
+    infer the eval type from type hints" on every build."""
+    import warnings
+
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        registry.QUERIES["u4_udf"](spark, sf_dir)
+
+
 def test_entry_smoke(spark):
     import __spark_entry__ as entry_mod
 

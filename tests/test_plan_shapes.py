@@ -119,13 +119,16 @@ def test_cosine_topk_broadcasts_query_vector(spark, sf_dir):
     assert "Exchange hashpartitioning" not in plan
 
 
-@pytest.mark.parametrize("qid", ["l1_exact_dedup", "l3_token_count"])
+@pytest.mark.parametrize(
+    "qid", ["l1_exact_dedup", "l3_token_count", "l4_cosine_topk", "l4_batch_topk"]
+)
 def test_llm_ops_have_no_python_in_hot_path(spark, sf_dir, qid):
-    """Dedup hashing and token counting must stay JVM-side — a
-    BatchEvalPython / ArrowEvalPython node here means a 10-100× hot-path
-    regression at corpus scale."""
+    """Dedup hashing, token counting and cosine scoring must stay
+    JVM-side — a BatchEvalPython / ArrowEvalPython / MapInArrow node
+    here means a 10-100× hot-path regression at corpus scale (the
+    cosine scorers have one spelling, the HOF fold, at every size)."""
     plan = plan_of(registry.QUERIES[qid](spark, sf_dir))
-    assert "EvalPython" not in plan
+    assert "Python" not in plan and "MapInArrow" not in plan
 
 
 def test_x2_q10_broadcasts_and_takeordered(spark, sf_dir):
@@ -251,14 +254,12 @@ def test_unigram_logprob_broadcasts_vocab(spark, sf_dir):
 def test_fuzzy_decontam_broadcasts_benchmark_bands(spark, sf_dir):
     """Candidate generation must probe broadcast BENCHMARK bands (small
     by construction) — the corpus band table must never shuffle on the
-    band key; the signature stage is either the Arrow-vectorized
-    mapInArrow branch or (small inputs, r13 size switch) the all-JVM
-    crc32 aggregate — never row-at-a-time Python."""
+    band key; the signature stage is the Arrow-vectorized mapInArrow
+    kernel at every input size — never row-at-a-time Python."""
     plan = plan_of(registry.QUERIES["l7_fuzzy_decontam"](spark, sf_dir))
     assert "BroadcastHashJoin" in plan
     assert "SortMergeJoin" not in plan
-    # one of the two bit-identical signature spellings must be present
-    assert "MapInArrow" in plan or "crc32" in plan
+    assert "MapInArrow" in plan
     assert "BatchEvalPython" not in plan  # never row-at-a-time Python
 
 
