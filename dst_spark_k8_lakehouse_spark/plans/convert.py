@@ -188,7 +188,7 @@ def convert_to_iceberg(spark: SparkSession, path: str) -> int:
     iceberg_writer.write_avro(
         spark, manifest, iceberg_writer.MANIFEST_SCHEMA, entries
     )
-    mlist = os.path.join(md, f"snap-{snap_id}.avro")
+    mlist = iceberg_writer.manifest_list_path(md, snap_id)
     iceberg_writer.write_avro(
         spark,
         mlist,

@@ -1372,33 +1372,61 @@ def drop_column(spark: SparkSession, table: str, name: str) -> int:
 
 
 
-def _checkpoint_add_dict(path: str, a: dict[str, Any]) -> dict[str, Any]:
-    """One checkpoint ``add`` struct (spec: ``dataChange: false``;
-    stats/tags/DV descriptors/row-tracking fields all survive — each
-    has a test pinning why dropping it would be a wrong-rows bug)."""
-    d = a.get("deletionVector")
-    return {
-        "path": path,
-        "partitionValues": a.get("partitionValues") or {},
-        "size": int(a["size"]),
-        "modificationTime": int(a.get("modificationTime") or 0),
-        "dataChange": False,
-        "deletionVector": (
-            {
-                "storageType": d["storageType"],
-                "pathOrInlineDv": d["pathOrInlineDv"],
-                "offset": int(d.get("offset") or 0),
-                "sizeInBytes": int(d["sizeInBytes"]),
-                "cardinality": int(d["cardinality"]),
-            }
-            if d
-            else None
-        ),
-        "stats": a.get("stats"),
-        "tags": a.get("tags"),
-        "baseRowId": a.get("baseRowId"),
-        "defaultRowCommitVersion": a.get("defaultRowCommitVersion"),
-    }
+# adds per written checkpoint batch: bounds peak memory at any add count
+_CHECKPOINT_CHUNK = 100_000
+
+
+def _checkpoint_add_table(files: dict[str, dict[str, Any]],
+                          paths: list[str], schema):
+    """The checkpoint rows of the live adds ``paths`` (keys of
+    ``files``) as a pyarrow table of ``schema``: its ``add`` column
+    filled, every other action column null. The ``add`` struct is
+    built column by column — one ``pa.array`` per field, no per-add
+    dict — with ``dataChange: false`` per the spec; stats, tags,
+    deletion-vector descriptors and row-tracking fields all survive
+    (each has a test pinning why dropping it would be a wrong-rows
+    bug). Shared by both checkpoint writers."""
+    import pyarrow as pa
+
+    add_type = schema.field("add").type
+    adds = [files[p] for p in paths]
+    n = len(adds)
+
+    def col(name, values):
+        return pa.array(values, type=add_type.field(name).type)
+
+    add = pa.StructArray.from_arrays(
+        [
+            col("path", paths),
+            col("partitionValues",
+                [a.get("partitionValues") or {} for a in adds]),
+            col("size", [int(a["size"]) for a in adds]),
+            col("modificationTime",
+                [int(a.get("modificationTime") or 0) for a in adds]),
+            pa.repeat(pa.scalar(False), n),
+            col("deletionVector", [
+                {
+                    "storageType": d["storageType"],
+                    "pathOrInlineDv": d["pathOrInlineDv"],
+                    "offset": int(d.get("offset") or 0),
+                    "sizeInBytes": int(d["sizeInBytes"]),
+                    "cardinality": int(d["cardinality"]),
+                }
+                if d else None
+                for d in (a.get("deletionVector") for a in adds)
+            ]),
+            col("stats", [a.get("stats") for a in adds]),
+            col("tags", [a.get("tags") for a in adds]),
+            col("baseRowId", [a.get("baseRowId") for a in adds]),
+            col("defaultRowCommitVersion",
+                [a.get("defaultRowCommitVersion") for a in adds]),
+        ],
+        fields=list(add_type),
+    )
+    return pa.Table.from_arrays(
+        [add if f.name == "add" else pa.nulls(n, f.type) for f in schema],
+        schema=schema,
+    )
 
 
 def write_checkpoint(spark: SparkSession, table: str) -> int:
@@ -1483,21 +1511,13 @@ def write_checkpoint(spark: SparkSession, table: str) -> int:
     log = os.path.join(table, "_delta_log")
     staging = os.path.join(log, f".cp-{uuid.uuid4().hex}.parquet")
     n_rows = len(head) + len(paths)
-    chunk = 100_000  # bounds peak memory at any add count
+    chunk = _CHECKPOINT_CHUNK
     with pq.ParquetWriter(staging, schema) as writer:
         writer.write_table(pa.Table.from_pylist(head, schema=schema))
         for i in range(0, len(paths), chunk):
-            writer.write_table(
-                pa.Table.from_pylist(
-                    [
-                        {"add": _checkpoint_add_dict(
-                            p, state["files"][p]
-                        )}
-                        for p in paths[i:i + chunk]
-                    ],
-                    schema=schema,
-                )
-            )
+            writer.write_table(_checkpoint_add_table(
+                state["files"], paths[i:i + chunk], schema
+            ))
     final = os.path.join(log, f"{version:020d}.checkpoint.parquet")
     os.replace(staging, final)
     tmp = os.path.join(log, f".lc-{uuid.uuid4().hex}.tmp")
@@ -1672,14 +1692,17 @@ def write_checkpoint_v2(
     state = delta_reader._replay(spark, table, None)
     upgrade = _v2_protocol_action(state)
     if upgrade is not None:
-        _commit_from_state(
-            spark,
-            table,
-            state,
-            [upgrade, _commit_info("UPGRADE PROTOCOL")],
-            "UPGRADE PROTOCOL",
+        actions = [upgrade, _commit_info("UPGRADE PROTOCOL")]
+        committed = _commit_from_state(
+            spark, table, state, actions, "UPGRADE PROTOCOL"
         )
-        state = delta_reader._replay(spark, table, None)
+        if committed == int(state["version"]) + 1:
+            # no race moved the head: the upgrade is the only change
+            for act in actions:
+                delta_reader._apply_action(state, act)
+            state["version"] = committed
+        else:
+            state = delta_reader._replay(spark, table, None)
     version = int(state["version"])
     if version < 0:
         raise ValueError(f"nothing to checkpoint at {table}")
@@ -1688,30 +1711,23 @@ def write_checkpoint_v2(
     sc_dir = os.path.join(log, "_sidecars")
     os.makedirs(sc_dir, exist_ok=True)
 
-    adds = [
-        _checkpoint_add_dict(p, a)
-        for p, a in sorted(state["files"].items())
-    ]
+    paths = sorted(state["files"])
     n_parts = (
         max(1, int(sidecar_files))
         if sidecar_files is not None
-        else max(1, -(-len(adds) // max(1, adds_per_sidecar)))
+        else max(1, -(-len(paths) // max(1, adds_per_sidecar)))
     )
-    chunk = -(-max(1, len(adds)) // n_parts)
+    chunk = -(-max(1, len(paths)) // n_parts)
     sc_schema = pa.schema(
         [("add", types["add"]), ("remove", types["remove"])]
     )
     sidecars: list[dict[str, Any]] = []
     for i in range(n_parts):
-        part = adds[i * chunk: (i + 1) * chunk]
+        part = paths[i * chunk: (i + 1) * chunk]
         name = f"{uuid.uuid4().hex}.parquet"
         full = os.path.join(sc_dir, name)
         pq.write_table(
-            pa.Table.from_pylist(
-                [{"add": a, "remove": None} for a in part],
-                schema=sc_schema,
-            ),
-            full,
+            _checkpoint_add_table(state["files"], part, sc_schema), full
         )
         st = os.stat(full)
         sidecars.append(
@@ -1783,7 +1799,7 @@ def write_checkpoint_v2(
     lc_tmp = os.path.join(log, f".lc-{uuid.uuid4().hex}.tmp")
     with open(lc_tmp, "w") as fh:
         json.dump(
-            {"version": version, "size": len(adds) + len(top_rows)}, fh
+            {"version": version, "size": len(paths) + len(top_rows)}, fh
         )
     os.replace(lc_tmp, os.path.join(log, "_last_checkpoint"))
     return version

@@ -272,7 +272,7 @@ def _cow_commit(
         fmt=iceberg_writer._fmt(meta),
     )
     iceberg_writer.write_avro(spark, manifest, mschema, new_entries)
-    mlist = os.path.join(md, f"snap-{snap_id}.avro")
+    mlist = iceberg_writer.manifest_list_path(md, snap_id)
     iceberg_writer.write_avro(
         spark,
         mlist,
@@ -475,7 +475,7 @@ def merge_iceberg(
     )
     manifest = os.path.join(md, f"m-{uuid.uuid4().hex}.avro")
     iceberg_writer.write_avro(spark, manifest, mschema, new_entries)
-    mlist = os.path.join(md, f"snap-{snap_id}.avro")
+    mlist = iceberg_writer.manifest_list_path(md, snap_id)
     iceberg_writer.write_avro(
         spark,
         mlist,

@@ -166,7 +166,7 @@ def _delete_commit(
             meta, manifest, snap_id, seq, content, entries
         )
     )
-    mlist = os.path.join(md, f"snap-{snap_id}.avro")
+    mlist = iceberg_writer.manifest_list_path(md, snap_id)
     iceberg_writer.write_avro(
         spark, mlist, iceberg_writer.mlist_schema(meta), mlist_entries
     )
@@ -544,7 +544,7 @@ def rewrite_position_delete_files(
                 meta, manifest, snap_id, seq, 1, entries_new
             )
         ]
-    mlist = os.path.join(md, f"snap-{snap_id}.avro")
+    mlist = iceberg_writer.manifest_list_path(md, snap_id)
     iceberg_writer.write_avro(
         spark, mlist, iceberg_writer.mlist_schema(meta), mlist_entries
     )

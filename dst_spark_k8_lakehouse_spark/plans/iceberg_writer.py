@@ -860,6 +860,16 @@ def mlist_schema(meta: dict) -> str:
     )
 
 
+def manifest_list_path(md: str, snap_id: int) -> str:
+    """A fresh manifest-list path for snapshot ``snap_id``, unique per
+    commit attempt (real Iceberg's ``snap-<id>-<attempt>-<uuid>``):
+    snapshot ids are time-based, so two writers racing for the same
+    metadata version in the same millisecond draw the same id, and a
+    shared file name let the loser overwrite the list the winner's
+    metadata points at (a lost append plus a duplicated one)."""
+    return os.path.join(md, f"snap-{snap_id}-{uuid.uuid4().hex}.avro")
+
+
 def _commit_metadata(table: str, meta: dict, version: int) -> None:
     """Put-if-absent publish of v{version}.metadata.json, then move the
     version hint (the catalog-pointer swap, single-writer)."""
@@ -967,7 +977,7 @@ def _snapshot_commit(
     entries.append(
         _mlist_entry(meta, manifest, snap_id, seq, 0, entries_new)
     )
-    mlist = os.path.join(md, f"snap-{snap_id}.avro")
+    mlist = manifest_list_path(md, snap_id)
     write_avro(spark, mlist, mlist_schema(meta), entries)
     summary = {
         "operation": operation,
@@ -1966,7 +1976,7 @@ def cherry_pick_snapshot(spark: SparkSession, table: str,
         if r.get("partitions") is not None:
             e["partitions"] = r.get("partitions")
         entries.append(e)
-    mlist = os.path.join(md, f"snap-{new_id}.avro")
+    mlist = manifest_list_path(md, new_id)
     write_avro(spark, mlist, mlist_schema(meta), entries)
     _bump_metadata_log(table, meta)
     summary = {

@@ -155,7 +155,7 @@ def export_iceberg_metadata(spark: SparkSession, table: str) -> int:
     iceberg_writer.write_avro(
         spark, manifest, iceberg_writer.MANIFEST_SCHEMA, entries
     )
-    mlist = os.path.join(md, f"snap-{snap_id}.avro")
+    mlist = iceberg_writer.manifest_list_path(md, snap_id)
     iceberg_writer.write_avro(
         spark,
         mlist,

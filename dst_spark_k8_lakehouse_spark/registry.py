@@ -55,6 +55,47 @@ def query(query_id: str, oracle: str | None = None) -> Callable[[F], F]:
 # ids whose only green row is the oldest (round 1). Rotation log with
 # last-green round per id lives in COVERAGE.md.
 PRIORITY: list[str] = [
+    # (b) builders that write a Delta checkpoint (column-wise add
+    # struct; v2 replays once), directly or by auto-checkpointing:
+    "d16_delta_native_dml",
+    "d27_delta_dv",
+    "d46_checkpoint_v2",
+    "x9_layout_lifecycle",
+    "d60_log_retention",
+    "x11_contract_lifecycle",
+    # (b) builders that commit Iceberg (manifests and manifest lists
+    # through the generated Avro encoder):
+    "d17_iceberg_native",
+    "d21_iceberg_dml",
+    "d22_iceberg_partitioned",
+    "d25_iceberg_source",
+    "d26_iceberg_mor",
+    "d29_uniform",
+    "d30_convert",
+    "d31_iceberg_meta",
+    "d32_iceberg_incremental",
+    "d33_restore",
+    "d35_sql_native",
+    "d36_iceberg_transforms",
+    "d38_iceberg_mor_read",
+    "d40_iceberg_changelog",
+    "d42_iceberg_skipping",
+    "d43_iceberg_sortorder",
+    "d44_iceberg_wap",
+    "d49_puffin_ndv",
+    "d52_iceberg_dv",
+    "d53_column_defaults",
+    "d56_partition_stats",
+    "d57_drop_column",
+    "d58_rewrite_pos_deletes",
+    "d59_ref_retention",
+    "t8_stream_to_iceberg",
+    "x5_cdc_pipeline",
+    "x6_time_partitioned_cdc",
+    "x7_ops_lifecycle",
+    "x8_wire_to_publish",
+    "x10_cbo_join",
+    "x12_cbo_multiway",
     # (b) builders on the one-spelling MinHash signature stage (always
     # mapInArrow) and band self-join, and on the one HOF cosine scorer:
     "l2_minhash_lsh",
@@ -84,11 +125,6 @@ PRIORITY: list[str] = [
     # write faces gained headers/tombstones/produce validation; the
     # commit paths emit lineage; the SQL face plans joins via the CBO:
     "d37_delta_dv_read",  # changed: driver-side DV set, LocalRelation
-    "d38_iceberg_mor_read",  # changed: driver-side eq-delete path
-    "d26_iceberg_mor",  # rides _apply_deletes
-    "d27_delta_dv",  # rides _dv_row_filter
-    "d52_iceberg_dv",  # rides the PUFFIN DV branch
-    "d58_rewrite_pos_deletes",  # rides the pos-delete branch
     "l2_semdedup",  # changed: broadcast hot-id split
     "l2_semdedup_recall",  # its recall contract
     "s13_kafka_produce",  # changed: headers folded into the oracle
@@ -100,9 +136,6 @@ PRIORITY: list[str] = [
     "t11_kafka_tcp_pipe",  # rides both write faces
     "x13_tcp_bronze",  # rides kafka_tcp + commit lineage
     "d74_lineage",  # changed: native-commit lineage hook
-    "d35_sql_native",  # changed: CBO-planned SELECT joins
-    "x12_cbo_multiway",  # rides order_joins
-    "x10_cbo_join",  # rides advise_join
     # (d) the 8 r06-stale ids (VERDICT r12 item 2 named them):
     "d19_delta_schema_merge",
     "d20_delta_partitioned",

@@ -4,9 +4,9 @@ Local-mode analog of the reference's notebook connector
 (``docker/spark-notebook/connector.py:18-152``): one function that builds a
 fully-configured session. The reference wires a k8s master, Iceberg+Delta
 Catalyst extensions, a Polaris REST catalog, and S3A credentials; our build
-parameterizes the same decisions for ``local[*]`` vs ``k8s://`` and guards
-the lakehouse-format extensions behind jar availability (the test container
-ships vanilla Spark).
+parameterizes the same decisions for ``local[*]`` vs ``k8s://``. It wires no
+lakehouse-format extension: the engine's lakehouse layer (``plans/``) reads
+and writes Delta and Iceberg natively, without the jars.
 
 Scale posture: these defaults are written for a real cluster —
 AQE (runtime re-planning + skew-join handling + partition coalescing),
@@ -22,31 +22,6 @@ import os
 from pyspark.sql import SparkSession
 
 
-def _lakehouse_extensions() -> dict[str, str]:
-    """Delta/Iceberg Catalyst extension wiring, only if the jars exist.
-
-    Mirrors ``connector.py:94-102`` (``spark.sql.extensions`` =
-    Iceberg + Delta; Delta as the ``spark_catalog``). In this container
-    neither package is installed, so this returns {} — the engine's
-    lakehouse layer (``plans/``) writes and reads both formats natively,
-    without the jars.
-    """
-    conf: dict[str, str] = {}
-    extensions: list[str] = []
-    try:  # delta-spark publishes the extension class with its jars
-        import delta  # noqa: F401
-
-        extensions.append("io.delta.sql.DeltaSparkSessionExtension")
-        conf["spark.sql.catalog.spark_catalog"] = (
-            "org.apache.spark.sql.delta.catalog.DeltaCatalog"
-        )
-    except ImportError:
-        pass
-    if extensions:
-        conf["spark.sql.extensions"] = ",".join(extensions)
-    return conf
-
-
 def get_session(
     app_name: str = "dst-spark-k8-lakehouse-spark",
     master: str | None = None,
@@ -57,7 +32,7 @@ def get_session(
 
     Parameters mirror the decisions in the reference connector:
     master selection (``connector.py:61``), memory/shuffle sizing
-    (``connector.py:126``), extension wiring (``connector.py:94-102``).
+    (``connector.py:126``).
 
     - ``master``: defaults to ``local[$SPARK_GRAFT_CPUS]`` (or
       ``local[*]``); pass ``k8s://...`` on a cluster.
@@ -110,8 +85,6 @@ def get_session(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.ui.enabled", "false")
     )
-    for key, value in _lakehouse_extensions().items():
-        builder = builder.config(key, value)
     if extra_conf:
         for key, value in extra_conf.items():
             builder = builder.config(key, value)

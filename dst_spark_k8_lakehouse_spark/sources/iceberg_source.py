@@ -689,7 +689,7 @@ class _IceWriter(DataSourceArrowWriter):
                     ),
                 }
             )
-            mlist = os.path.join(md, f"snap-{snap_id}.avro")
+            mlist = iceberg_writer.manifest_list_path(md, snap_id)
             avro_codec.write_avro_file(
                 mlist, iceberg_writer.MANIFEST_LIST_SCHEMA, entries
             )

@@ -1,9 +1,9 @@
 """Reference Avro codec for the tests: the interpreted record decoder
-(one schema dispatch per value, reading from a stream) and a container
-writer that can emit deflate blocks and negative (byte-sized) array /
-map block counts. ``plans/avro_codec``'s generated decoders are pinned
-against this module; the package itself keeps only the generated
-decoder and the null-codec writer."""
+and encoder (one schema dispatch per value) and a container writer
+that can emit deflate blocks and negative (byte-sized) array / map
+block counts. ``plans/avro_codec``'s generated decoders and encoders
+are pinned against this module; the package itself keeps only the
+generated code and the null-codec writer."""
 
 from __future__ import annotations
 
@@ -13,8 +13,6 @@ import os
 import struct
 import zlib
 from typing import Any, BinaryIO, NamedTuple
-
-from dst_spark_k8_lakehouse_spark.plans import avro_codec
 
 MAGIC = b"Obj\x01"
 
@@ -202,23 +200,51 @@ class Branch(NamedTuple):
     value: Any
 
 
+def put_long(out: bytearray, v: int) -> None:
+    u = (v << 1) ^ (v >> 63)  # zigzag; arithmetic shift keeps negatives exact
+    while True:
+        b = u & 0x7F
+        u >>= 7
+        if u:
+            out.append(b | 0x80)
+        else:
+            out.append(b)
+            return
+
+
+def put_bytes(out: bytearray, b: bytes) -> None:
+    put_long(out, len(b))
+    out += b
+
+
+def union_branch(schema: list, v: Any) -> int:
+    """The branch a plain value takes: ``null`` for None, else the
+    first non-null branch."""
+    if v is None and "null" in schema:
+        return schema.index("null")
+    for i, branch in enumerate(schema):
+        if branch != "null":
+            return i
+    raise ValueError(f"no union branch for {v!r} in {schema}")
+
+
 def encode(schema: Any, v: Any, out: bytearray, names: dict[str, Any],
            negative_blocks: bool = False) -> None:
-    """Binary-encode ``v``; ``negative_blocks`` writes arrays and maps
-    as two-item blocks with negative counts and byte sizes (the
-    skippable form real writers may emit)."""
+    """Binary-encode ``v``, one schema dispatch per value. A record
+    field missing from ``v`` encodes its ``default``; a union value is
+    a ``Branch`` or a plain value (``union_branch``).
+    ``negative_blocks`` writes arrays and maps as two-item blocks with
+    negative counts and byte sizes (the skippable form real writers
+    may emit)."""
     schema, t = resolve(schema, names)
     if t == "union":
         if not isinstance(v, Branch):
-            v = Branch(
-                schema.index("null") if v is None
-                else next(i for i, b in enumerate(schema) if b != "null"),
-                v,
-            )
-        avro_codec._put_long(out, v.index)
+            v = Branch(union_branch(schema, v), v)
+        put_long(out, v.index)
         encode(schema[v.index], v.value, out, names, negative_blocks)
     elif t in ("array", "map"):
-        items = list(v.items()) if t == "map" else list(v)
+        items = (list(dict(v or {}).items()) if t == "map"
+                 else list(v or []))
         sub = schema["values" if t == "map" else "items"]
         step = 2 if negative_blocks else max(len(items), 1)
         for i in range(0, len(items), step):
@@ -226,36 +252,61 @@ def encode(schema: Any, v: Any, out: bytearray, names: dict[str, Any],
             body = bytearray()
             for item in chunk:
                 if t == "map":
-                    avro_codec._put_bytes(body, item[0].encode("utf-8"))
+                    put_bytes(body, str(item[0]).encode("utf-8"))
                     item = item[1]
                 encode(sub, item, body, names, negative_blocks)
             if negative_blocks:
-                avro_codec._put_long(out, -len(chunk))
-                avro_codec._put_long(out, len(body))
+                put_long(out, -len(chunk))
+                put_long(out, len(body))
             else:
-                avro_codec._put_long(out, len(chunk))
+                put_long(out, len(chunk))
             out += body
-        avro_codec._put_long(out, 0)
+        put_long(out, 0)
     elif t == "record":
         for f in schema["fields"]:
-            encode(f["type"], v[f["name"]], out, names, negative_blocks)
+            fv = (f["default"] if f["name"] not in v and "default" in f
+                  else v[f["name"]])
+            encode(f["type"], fv, out, names, negative_blocks)
+    elif t == "null":
+        pass
+    elif t == "boolean":
+        out.append(1 if v else 0)
+    elif t in ("int", "long"):
+        put_long(out, int(v))
+    elif t == "float":
+        out += struct.pack("<f", float(v))
+    elif t == "double":
+        out += struct.pack("<d", float(v))
+    elif t == "bytes":
+        put_bytes(out, bytes(v))
+    elif t == "string":
+        put_bytes(out, str(v).encode("utf-8"))
+    elif t == "fixed":
+        b = bytes(v)
+        if len(b) != int(schema["size"]):
+            raise ValueError(f"fixed size {len(b)} != {schema['size']}")
+        out += b
+    elif t == "enum":
+        put_long(out, schema["symbols"].index(v))
     else:
-        avro_codec._encode(schema, v, out, names)
+        raise NotImplementedError(f"Avro type {t!r}")
 
 
 def write_container(path: str, schema_json: str, records: list,
                     codec: str = "null", per_block: int = 1000,
-                    negative_blocks: bool = False) -> None:
-    """An Avro container file with ``per_block`` records per block."""
+                    negative_blocks: bool = False,
+                    sync: bytes | None = None) -> None:
+    """An Avro container file with ``per_block`` records per block
+    (``sync``: the marker to use instead of a random one)."""
     schema = json.loads(schema_json)
     header = bytearray(MAGIC)
-    avro_codec._encode(
+    encode(
         {"type": "map", "values": "bytes"},
         {"avro.schema": schema_json.encode("utf-8"),
          "avro.codec": codec.encode("utf-8")},
         header, {},
     )
-    sync = os.urandom(16)
+    sync = os.urandom(16) if sync is None else sync
     header += sync
     names = register_all(schema, {})
     for i in range(0, len(records), per_block):
@@ -266,8 +317,8 @@ def write_container(path: str, schema_json: str, records: list,
         if codec == "deflate":
             co = zlib.compressobj(wbits=-15)
             block = bytearray(co.compress(bytes(block)) + co.flush())
-        avro_codec._put_long(header, len(chunk))
-        avro_codec._put_bytes(header, bytes(block))
+        put_long(header, len(chunk))
+        put_bytes(header, bytes(block))
         header += sync
     with open(path, "wb") as fh:
         fh.write(bytes(header))

@@ -123,6 +123,19 @@ def test_kitchen_sink_roundtrip(spark, tmp_path, codec):
         assert r["again"] == {"x": i * 11}
 
 
+def _assert_reference_bytes(path: str, schema_json: str, records) -> None:
+    """The file ``write_avro_file`` left at ``path`` is byte-identical
+    to the interpreted reference writer's with the same sync marker."""
+    with open(path, "rb") as fh:
+        got = fh.read()
+        fh.seek(0)
+        _meta, sync = ref.read_header(fh)
+    want = path + ".ref"
+    ref.write_container(want, schema_json, records, sync=sync)
+    with open(want, "rb") as fh:
+        assert got == fh.read()
+
+
 def test_not_avro_raises(tmp_path):
     p = str(tmp_path / "x")
     with open(p, "wb") as fh:
@@ -147,6 +160,7 @@ def test_python_writer_roundtrips_through_python_reader(tmp_path):
         for i in range(2500)  # > one 1000-record block
     ]
     avro_codec.write_avro_file(p, json.dumps(SCHEMA), rows)
+    _assert_reference_bytes(p, json.dumps(SCHEMA), rows)
     back = avro_codec.read_avro_file(p)
     assert len(back) == 2500
     for i in (0, 999, 1000, 2499):
@@ -308,12 +322,13 @@ def test_compiled_decoder_edge_values(tmp_path):
         ],
     })
     edge = [-(2**63), -(2**63) + 1, -1, 0, 1, 63, 64, -64, -65,
-            2**63 - 1, 2**31, -(2**31) - 1]
+            8191, 8192, -8192, -8193, 2**63 - 1, 2**31, -(2**31) - 1]
     rows = [
         {"v": v, "s": "", "b": b"", "a": edge, "m": {}} for v in edge
     ]
     p = str(tmp_path / "e.avro")
     avro_codec.write_avro_file(p, schema, rows)
+    _assert_reference_bytes(p, schema, rows)
     assert avro_codec.read_avro_file(p) == rows
     assert ref.read_records(p) == rows
     assert avro_codec.read_avro_file(p, project=["v", "a"]) == [
@@ -365,8 +380,9 @@ def test_projection_paths(tmp_path):
 
 
 def test_decoders_cached_per_schema_and_projection(tmp_path):
-    """Manifests sharing a writer schema share one generated decoder:
-    reading another file of the same schema compiles nothing."""
+    """Manifests sharing a writer schema share one generated decoder
+    and encoder: reading or writing another file of the same schema
+    compiles nothing."""
     paths = []
     for k in range(3):
         p = str(tmp_path / f"c{k}.avro")
@@ -375,10 +391,13 @@ def test_decoders_cached_per_schema_and_projection(tmp_path):
     avro_codec.read_avro_file(paths[0])
     avro_codec.read_avro_file(paths[0], project=["s"])
     before = dict(avro_codec._DECODERS)
+    encoders = dict(avro_codec._ENCODERS)
     for p in paths[1:]:
         avro_codec.read_avro_file(p)
         avro_codec.read_avro_file(p, project=["s"])
+        avro_codec.write_avro_file(p, json.dumps(SCHEMA), [])
     assert avro_codec._DECODERS == before
+    assert avro_codec._ENCODERS == encoders
 
 
 # ---------------------------------------------------------------------------
@@ -386,11 +405,14 @@ def test_decoders_cached_per_schema_and_projection(tmp_path):
 # schemas, and damaged files fail with EOFError / ValueError
 
 
-def _schemas_and_values():
+def _schemas_and_values(plain: bool = False):
     """(schema, records, projection paths) over random schemas of
     bounded depth: nested records, ``["null", X]`` and multi-branch
     unions, arrays and maps, fixed, enum, float, double and named-type
-    references."""
+    references. Union values are ``ref.Branch``es over every branch;
+    with ``plain`` they are the values ``write_avro_file`` takes (None
+    or one of the first non-null branch), and record fields with
+    defaults may be missing from the records."""
     from hypothesis import strategies as st
 
     longs = st.integers(min_value=-(2**63), max_value=2**63 - 1)
@@ -445,15 +467,11 @@ def _schemas_and_values():
                 name, (s, v) = draw(st.sampled_from(named))
                 return name, v
             if kind == "record":
-                fields, values = [], {}
-                for _ in range(draw(st.integers(min_value=1, max_value=4))):
-                    ft, fv = typ(depth - 1)
-                    f = fresh("f")
-                    fields.append({"name": f, "type": ft})
-                    values[f] = fv
+                fields, v = record_fields(
+                    depth - 1, "f",
+                    draw(st.integers(min_value=1, max_value=4)))
                 s = {"type": "record", "name": fresh("r"),
                      "fields": fields}
-                v = st.fixed_dictionaries(values)
                 named.append((s["name"], (s, v)))
                 return s, v
             if kind == "array":
@@ -469,9 +487,6 @@ def _schemas_and_values():
             # of each container kind (the reference projection tells
             # branches apart by decoded value)
             branches, values, used = [], [], set()
-            if draw(st.booleans()):
-                branches.append("null")
-                values.append(st.none())
             for _ in range(draw(st.integers(min_value=1, max_value=3))):
                 n_named = len(named)
                 bt, bv = typ(depth - 1, in_union=True)
@@ -485,19 +500,42 @@ def _schemas_and_values():
                 used.add(key)
                 branches.append(bt)
                 values.append(bv)
+            if draw(st.booleans()):  # at any position
+                at = draw(st.integers(min_value=0, max_value=len(values)))
+                branches.insert(at, "null")
+                values.insert(at, st.none())
+            if plain:
+                first = next(i for i, b in enumerate(branches)
+                             if b != "null")
+                return branches, (
+                    st.none() | values[first] if "null" in branches
+                    else values[first]
+                )
             return branches, st.one_of(*[
                 vs.map(lambda x, i=i: ref.Branch(i, x))
                 for i, vs in enumerate(values)
             ])
 
-        fields, values = [], {}
-        for _ in range(draw(st.integers(min_value=1, max_value=5))):
-            ft, fv = typ(2)
-            f = fresh("top")
-            fields.append({"name": f, "type": ft})
-            values[f] = fv
+        def record_fields(depth, prefix, n):
+            """``n`` fields and the strategy of their record values;
+            with ``plain``, defaulted fields are optional."""
+            fields, values, optional = [], {}, {}
+            for _ in range(n):
+                ft, fv = typ(depth)
+                f = {"name": fresh(prefix), "type": ft}
+                fields.append(f)
+                if plain and isinstance(ft, list) and "null" in ft:
+                    f["default"] = None
+                elif plain and ft in ("int", "long", "string", "boolean",
+                                      "double") and draw(st.booleans()):
+                    f["default"] = draw(prim_values[ft])
+                (optional if "default" in f else values)[f["name"]] = fv
+            return fields, st.fixed_dictionaries(values, optional=optional)
+
+        fields, rec = record_fields(
+            2, "top", draw(st.integers(min_value=1, max_value=5)))
         schema = {"type": "record", "name": "top", "fields": fields}
-        records = draw(st.lists(st.fixed_dictionaries(values), max_size=6))
+        records = draw(st.lists(rec, max_size=6))
         # projection: random paths down the generated field names,
         # including names that exist only elsewhere in the schema
         all_names = [f"f{i}" for i in range(1, counter[0] + 1)] + [
@@ -539,6 +577,45 @@ def test_property_generated_decoder_equals_reference(tmp_path):
         ]
 
     check()
+
+
+def test_property_encoder_bytes_equal_reference(tmp_path):
+    """``write_avro_file`` (the generated encoder) emits exactly the
+    bytes of the interpreted reference writer, sync marker fixed, on
+    random schemas — defaults for missing fields, ``["null", X]`` and
+    multi-branch unions, arrays, maps, fixed, enum, float/double, and
+    named types defined in a union branch the value does not take."""
+    from hypothesis import HealthCheck, given, settings
+
+    @settings(max_examples=80, deadline=None,
+              suppress_health_check=[HealthCheck.function_scoped_fixture,
+                                     HealthCheck.too_slow])
+    @given(_schemas_and_values(plain=True))
+    def check(case):
+        schema, records, _paths = case
+        p = str(tmp_path / "enc.avro")
+        avro_codec.write_avro_file(p, json.dumps(schema), records)
+        _assert_reference_bytes(p, json.dumps(schema), records)
+
+    check()
+
+
+@pytest.mark.parametrize("field_type, value", [
+    ({"type": "fixed", "name": "f4", "size": 4}, b"abc"),
+    ({"type": "enum", "name": "e", "symbols": ["A", "B"]}, "C"),
+    (["null"], 1),
+    ([], None),
+])
+def test_encoder_rejects_values_as_reference(tmp_path, field_type, value):
+    """A fixed of the wrong size, an unknown enum symbol and a value no
+    union branch takes raise ValueError in both encoders."""
+    schema = json.dumps({"type": "record", "name": "r",
+                         "fields": [{"name": "x", "type": field_type}]})
+    p = str(tmp_path / "bad.avro")
+    with pytest.raises(ValueError):
+        avro_codec.write_avro_file(p, schema, [{"x": value}])
+    with pytest.raises(ValueError):
+        ref.write_container(p, schema, [{"x": value}])
 
 
 def _block_span(path: str) -> tuple[int, int]:
@@ -603,10 +680,10 @@ def test_trailing_bytes_in_block_raise(tmp_path):
     sync = raw[-16:]
     block = bytearray()
     for r in rows:
-        avro_codec._encode(json.loads(sch), r, block, {})
+        ref.encode(json.loads(sch), r, block, {})
     body = bytearray()
-    avro_codec._put_long(body, 2)
-    avro_codec._put_bytes(body, bytes(block) + b"\x00")
+    ref.put_long(body, 2)
+    ref.put_bytes(body, bytes(block) + b"\x00")
     open(p, "wb").write(raw[:start] + bytes(body) + sync)
     with pytest.raises(ValueError, match="undecoded"):
         avro_codec.read_avro_file(p)

@@ -174,6 +174,51 @@ def test_two_process_delta_append_race(spark, tmp_path):
     assert versions == list(range(2 * N_BATCHES + 1))
 
 
+def test_same_millisecond_iceberg_appends_keep_both(spark, tmp_path,
+                                                   monkeypatch):
+    """Two appends racing for one metadata version in the same
+    millisecond draw the same time-based snapshot id. The loser's
+    manifest list must not overwrite the winner's (it did while the
+    list was named after the id alone: the winner's snapshot then
+    served the loser's rows, which the loser's retry added again)."""
+    import types
+
+    from dst_spark_k8_lakehouse_spark.plans import (
+        iceberg_reader,
+        iceberg_writer,
+    )
+
+    table = str(tmp_path / "t")
+    iceberg_writer.create_iceberg(spark.range(0).select("id"), table)
+    monkeypatch.setattr(iceberg_writer, "time",
+                        types.SimpleNamespace(time=lambda: 1.7e9))
+    real_write = iceberg_writer._write_data_files
+    calls = []
+
+    def write_then_lose(df, tbl, meta=None):
+        calls.append(tbl)
+        if len(calls) == 1:  # the winner commits in between
+            iceberg_writer.append_iceberg(
+                spark.range(10, 13).select("id"), table)
+        return real_write(df, tbl, meta)
+
+    monkeypatch.setattr(iceberg_writer, "_write_data_files",
+                        write_then_lose)
+    loser = spark.range(0, 3).select("id")
+    try:
+        iceberg_writer.append_iceberg(loser, table)
+        raise AssertionError("the loser's commit should have raced")
+    except FileExistsError:
+        pass
+    got = sorted(r.id for r in iceberg_reader.read_iceberg(spark, table)
+                 .collect())
+    assert got == [10, 11, 12]
+    iceberg_writer.append_iceberg(loser, table)  # the app-level retry
+    got = sorted(r.id for r in iceberg_reader.read_iceberg(spark, table)
+                 .collect())
+    assert got == [0, 1, 2, 10, 11, 12]
+
+
 def test_two_process_iceberg_append_race(spark, tmp_path):
     from dst_spark_k8_lakehouse_spark.plans import (
         iceberg_reader,
