@@ -394,6 +394,7 @@ def unregister_listener(spark, listener) -> None:
 
 def _register() -> None:
     from dst_spark_k8_lakehouse_spark.registry import query
+    from dst_spark_k8_lakehouse_spark.sources.catalog import load_table
 
     @query(
         "d74_lineage",
@@ -415,13 +416,12 @@ def _register() -> None:
         ``event_ok``. Basenames keep the oracle sf-independent."""
         import tempfile
 
-        # direct parquet reads, NOT load_table: a session that ran
-        # cache_tables() (bench flow) serves cached handles whose
-        # plans are InMemoryRelations — inputFiles() correctly reports
-        # [] for those (documented above), which would break this
-        # oracle's file-backed contract
-        orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
-        customer = spark.read.parquet(f"{sf_dir}/customer.parquet")
+        # file-backed scans even after cache_tables() (bench flow): its
+        # cached handles plan as InMemoryRelations, for which
+        # inputFiles() correctly reports [] (documented above), which
+        # would break this oracle's file-backed contract
+        orders = load_table(spark, sf_dir, "orders", cached=False)
+        customer = load_table(spark, sf_dir, "customer", cached=False)
         joined = orders.join(
             customer, orders.o_custkey == customer.c_custkey
         )

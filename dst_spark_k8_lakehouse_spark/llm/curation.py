@@ -21,7 +21,7 @@ from dst_spark_k8_lakehouse_spark.llm.dedup import (
     with_planted_duplicates,
 )
 from dst_spark_k8_lakehouse_spark.registry import query
-from dst_spark_k8_lakehouse_spark.sources.catalog import load_table
+from dst_spark_k8_lakehouse_spark.sources.catalog import load_table, persisted_table
 
 CHUNK = 64  # tokens per chunk
 STRIDE = 48  # chunk start distance (CHUNK - STRIDE = 16-token overlap)
@@ -692,12 +692,6 @@ def l6_dsir_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Per-process persisted DSIR bucket-weight tables, (sf_dir, B, expr) →
-# parquet path — the l7_contamination_scan pattern: a target domain
-# changes rarely, so a production pipeline builds the weight table
-# ONCE per target release and re-reads it for every corpus pass.
-_DSIR_WEIGHT_CACHE: dict[tuple[str, int, str], str] = {}
-
 # Cross-engine bucket key: the first 60 bits of md5(w) — the one hash
 # DuckDB and Spark both compute bit-identically over UTF-8 strings
 # (DuckDB has no xxhash64), so the ORACLE recomputes the same buckets.
@@ -794,24 +788,22 @@ def _dsir_toks(docs: DataFrame) -> DataFrame:
     )
 
 
+# Persisted DSIR bucket-weight tables, one per (sf_dir, B, expr) — the
+# l7_contamination_scan pattern (``persisted_table``): a target domain
+# changes rarely, so a production pipeline builds the weight table
+# ONCE per target release and re-reads it for every corpus pass.
 def _persisted_dsir_weights(
     spark: SparkSession, sf_dir: str, n_buckets: int,
     bucket_sql: str | None,
 ) -> DataFrame:
-    key = (sf_dir, n_buckets, bucket_sql or "xxhash64")
-    if key not in _DSIR_WEIGHT_CACHE:
-        import atexit
-        import shutil
-        import tempfile
-
-        path = tempfile.mkdtemp(prefix="dst-dsir-weights-")
-        atexit.register(shutil.rmtree, path, ignore_errors=True)
-        toks = _dsir_toks(load_table(spark, sf_dir, "documents"))
-        dsir_bucket_weights(toks, n_buckets, bucket_sql).write.mode(
-            "overwrite"
-        ).parquet(path)
-        _DSIR_WEIGHT_CACHE[key] = path
-    return spark.read.parquet(_DSIR_WEIGHT_CACHE[key])
+    return persisted_table(
+        spark,
+        ("dsir-weights", sf_dir, n_buckets, bucket_sql or "xxhash64"),
+        lambda: dsir_bucket_weights(
+            _dsir_toks(load_table(spark, sf_dir, "documents")),
+            n_buckets, bucket_sql,
+        ),
+    )
 
 
 DSIR_BUCKETS = 65536

@@ -39,7 +39,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from dst_spark_k8_lakehouse_spark.registry import query
-from dst_spark_k8_lakehouse_spark.sources.catalog import load_table
+from dst_spark_k8_lakehouse_spark.sources.catalog import load_table, persisted_table
 
 # Copies get doc_id + OFFSET so planted duplicates are recognizable and
 # the original (smaller id) always wins the keep-first rule.
@@ -114,23 +114,37 @@ def _spread_for_python(df: DataFrame, key: str = "doc_id") -> DataFrame:
     at 100 TB the scan has thousands of splits and this adds nothing.
     Half the core count is the sweet spot locally: Python-worker
     round-trip overhead is per-task, and signature work per task is
-    small (32 tasks measured slower than 16).
+    small (32 tasks measured slower than 16). A no-op below 2 task
+    slots, where a spread only adds a shuffle.
 
-    CALLER BEWARE: the ``df.rdd`` partition probe eagerly executes any
-    upstream shuffle stages under AQE — only apply this to scan-shaped
-    inputs (callers with shuffle-heavy upstreams pass ``spread=False``
-    to ``signature_table``; post-shuffle partitioning is already
-    cluster-wide, so spreading would be a no-op bought at the price of
-    running the upstream twice)."""
-    target = max(4, df.sparkSession.sparkContext.defaultParallelism // 2)
-    if df.rdd.getNumPartitions() >= target:
+    The input's partition count comes from its plan
+    (``_planned_partitions``): deciding runs no Spark job and no
+    upstream stage."""
+    slots = df.sparkSession.sparkContext.defaultParallelism
+    if slots < 2:
+        return df
+    target = max(4, slots // 2)
+    if _planned_partitions(df) >= target:
         return df
     return df.repartition(target, key)
 
 
+def _planned_partitions(df: DataFrame) -> int:
+    """Partitions ``df`` will run with, read off its plan: the physical
+    plan's output partitioning when it fixes one (an exchange, a cached
+    repartition), else a file-scan estimate, input bytes over
+    ``spark.sql.files.maxPartitionBytes`` (a lower bound on the splits)."""
+    qe = df._jdf.queryExecution()
+    n = qe.sparkPlan().outputPartitioning().numPartitions()
+    if n > 0:
+        return n
+    size = int(qe.optimizedPlan().stats().sizeInBytes())
+    return -(-size // qe.sparkSession().sessionState().conf().filesMaxPartitionBytes())
+
+
 # Public face of the spread for non-Python compute-bound passes
 # (interpreted-HOF tokenize/hash pipelines in curation, contamination,
-# textstats) — same semantics, same CALLER BEWARE note.
+# textstats) — same semantics.
 spread_compute = _spread_for_python
 
 
@@ -260,8 +274,7 @@ def signature_table(
     re-ingesting a doc reproduces its row exactly. Docs with fewer than
     ``shingle_n`` tokens have no shingles and are dropped (empty text
     is not duplicate content). ``spread=False`` skips the
-    local-parallelism repartition — REQUIRED when ``docs`` has shuffle
-    stages upstream (see ``_spread_for_python``).
+    local-parallelism repartition (see ``_spread_for_python``).
 
     One spelling at every input size: the numpy Arrow-batch stage
     (``_minhash_batch_fn`` in ``mapInArrow``), whose Python
@@ -349,10 +362,10 @@ def incremental_neardup(
     join touches just the buckets the new docs land in.
     """
     # spread=False: ingest batches typically arrive post-transform with
-    # shuffle-wide partitioning, and the spread probe would re-execute
-    # that upstream. localCheckpoint: the signature UDF output feeds the
-    # band join AND is returned for the caller's state append — pin it
-    # so the Python stage runs once, not once per consumer.
+    # shuffle-wide partitioning already. localCheckpoint: the signature
+    # UDF output feeds the band join AND is returned for the caller's
+    # state append — pin it so the Python stage runs once, not once per
+    # consumer.
     # shingle_n MUST match how existing_sigs was built — mismatched
     # shingle sizes make even exact copies score Jaccard ~0 silently
     new_sigs = signature_table(
@@ -471,28 +484,21 @@ def l2_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     return verified_pairs(candidates_from_sigs(sigs), sigs)
 
 
-# Per-process persisted signature tables for the production-flow LSH
-# query: (sf_dir) → parquet path. A corpus's minhash signatures are
-# computed ONCE per ingest (deterministic, persistable — see
+# The production-flow LSH query reads a persisted signature table
+# (``persisted_table``, one per sf_dir). A corpus's minhash signatures
+# are computed ONCE per ingest (deterministic, persistable — see
 # signature_table / incremental_neardup); every dedup pass after that
 # reads the stored 40-numbers-per-doc table instead of re-running the
 # Python signature stage over the text. The bench warm pass pays the
 # build; the timed pass measures what a production pass costs.
-_SIG_TABLE_CACHE: dict[str, str] = {}
-
-
 def _persisted_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
-    if sf_dir not in _SIG_TABLE_CACHE:
-        import atexit
-        import shutil
-        import tempfile
-
-        path = tempfile.mkdtemp(prefix="dst-minhash-sigs-")
-        atexit.register(shutil.rmtree, path, ignore_errors=True)
-        docs = with_planted_duplicates(load_table(spark, sf_dir, "documents"))
-        signature_table(docs).write.mode("overwrite").parquet(path)
-        _SIG_TABLE_CACHE[sf_dir] = path
-    return spark.read.parquet(_SIG_TABLE_CACHE[sf_dir])
+    return persisted_table(
+        spark,
+        ("minhash-sigs", sf_dir),
+        lambda: signature_table(
+            with_planted_duplicates(load_table(spark, sf_dir, "documents"))
+        ),
+    )
 
 
 @query("l2_minhash_lsh_sigs")  # rows-only: LSH is not SQL-expressible

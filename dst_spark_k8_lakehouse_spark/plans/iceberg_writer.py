@@ -49,9 +49,11 @@ pointer via the catalog).
 
 from __future__ import annotations
 
+import datetime
 import json
 import os
 import re
+import struct
 import time
 import uuid
 from typing import Any
@@ -380,15 +382,13 @@ def _typed_partition_value(raw: str | None, iceberg_type: str):
     if iceberg_type == "boolean":
         return raw == "true"
     if iceberg_type == "date":
-        import datetime
-
-        return (
-            datetime.date.fromisoformat(raw) - datetime.date(1970, 1, 1)
-        ).days
+        return (datetime.date.fromisoformat(raw) - _EPOCH_DATE).days
     return raw
 
 
 _BOUND_MAX_STRING = 64  # longer strings carry no bounds (skip, keep)
+_EPOCH_DATE = datetime.date(1970, 1, 1)
+_EPOCH = datetime.datetime(1970, 1, 1)
 
 
 def bound_bytes(v: Any, iceberg_type: str) -> bytes | None:
@@ -396,44 +396,39 @@ def bound_bytes(v: Any, iceberg_type: str) -> bytes | None:
     a bound — little-endian fixed-width numerics, UTF-8 strings, days
     for dates, micros for timestamps. None = not representable (the
     column simply carries no bound — conservative)."""
-    import datetime as _dt
-    import struct as _st
-
     if v is None:
         return None
     try:
         if iceberg_type == "int":
-            return _st.pack("<i", int(v))
+            return struct.pack("<i", int(v))
         if iceberg_type == "long":
-            return _st.pack("<q", int(v))
+            return struct.pack("<q", int(v))
         if iceberg_type == "float":
-            return _st.pack("<f", float(v))
+            return struct.pack("<f", float(v))
         if iceberg_type == "double":
-            return _st.pack("<d", float(v))
+            return struct.pack("<d", float(v))
         if iceberg_type == "date":
-            d = v if isinstance(v, _dt.date) else _dt.date.fromisoformat(
+            d = v if isinstance(v, datetime.date) else datetime.date.fromisoformat(
                 str(v)
             )
-            return _st.pack(
-                "<i", (d - _dt.date(1970, 1, 1)).days
-            )
+            return struct.pack("<i", (d - _EPOCH_DATE).days)
         if iceberg_type in ("timestamp", "timestamptz"):
             ts = v
-            if not isinstance(ts, _dt.datetime):
-                ts = _dt.datetime.fromisoformat(str(ts))
+            if not isinstance(ts, datetime.datetime):
+                ts = datetime.datetime.fromisoformat(str(ts))
             if ts.tzinfo is not None:
-                ts = ts.astimezone(_dt.timezone.utc).replace(tzinfo=None)
-            delta = ts - _dt.datetime(1970, 1, 1)
+                ts = ts.astimezone(datetime.timezone.utc).replace(tzinfo=None)
+            delta = ts - _EPOCH
             micros = (
                 delta.days * 86_400 + delta.seconds
             ) * 1_000_000 + delta.microseconds
-            return _st.pack("<q", micros)
+            return struct.pack("<q", micros)
         if iceberg_type == "string":
             s = str(v)
             if len(s) > _BOUND_MAX_STRING:
                 return None
             return s.encode("utf-8")
-    except (ValueError, OverflowError, _st.error):
+    except (ValueError, OverflowError, struct.error):
         return None
     return None
 
@@ -447,20 +442,18 @@ def bound_value(b: bytes, iceberg_type: str) -> Any:
     float→double): a manifest written before the promotion carries
     4-byte bounds for a column the schema now calls long/double — the
     byte length, not the current type name, decides the decode."""
-    import struct as _st
-
     if iceberg_type == "int":
-        return _st.unpack("<i", b)[0]
+        return struct.unpack("<i", b)[0]
     if iceberg_type == "long":
-        return _st.unpack("<i" if len(b) == 4 else "<q", b)[0]
+        return struct.unpack("<i" if len(b) == 4 else "<q", b)[0]
     if iceberg_type == "float":
-        return _st.unpack("<f", b)[0]
+        return struct.unpack("<f", b)[0]
     if iceberg_type == "double":
-        return _st.unpack("<f" if len(b) == 4 else "<d", b)[0]
+        return struct.unpack("<f" if len(b) == 4 else "<d", b)[0]
     if iceberg_type == "date":
-        return _st.unpack("<i", b)[0]
+        return struct.unpack("<i", b)[0]
     if iceberg_type in ("timestamp", "timestamptz"):
-        return _st.unpack("<q", b)[0]
+        return struct.unpack("<q", b)[0]
     if iceberg_type == "string":
         return b.decode("utf-8")
     raise NotImplementedError(f"bound type {iceberg_type}")
@@ -1421,7 +1414,6 @@ def rename_column(table: str, old: str, new: str) -> None:
 # strings, booleans as JSON booleans, dates as "YYYY-MM-DD" strings,
 # decimals as their string form — matching the spec's table.
 def json_single_value(value: Any, iceberg_type: str) -> Any:
-    import datetime
     import decimal
     import math
 
@@ -1461,7 +1453,6 @@ def json_single_value(value: Any, iceberg_type: str) -> Any:
 def from_json_single_value(v: Any, iceberg_type: str) -> Any:
     """Inverse of ``json_single_value`` — a Python literal Spark's
     ``F.lit`` accepts for the matching Spark type."""
-    import datetime
     import decimal
 
     t = iceberg_type

@@ -6,6 +6,8 @@ from __future__ import annotations
 
 import os
 import sys
+import uuid
+from contextlib import contextmanager
 from pathlib import Path
 
 import duckdb
@@ -42,3 +44,29 @@ def duck(sf_dir):
         )
     yield con
     con.close()
+
+
+@contextmanager
+def spark_jobs(spark):
+    """Collect the ids of the Spark jobs started inside the block (a job
+    group around it; the listener bus is drained before the ids are
+    read, so no finished job is missed)."""
+    sc = spark.sparkContext
+    group = f"jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group, False)
+    jobs: list[int] = []
+    try:
+        yield jobs
+    finally:
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        jobs.extend(sc.statusTracker().getJobIdsForGroup(group))
+        sc._jsc.clearJobGroup()
+
+
+@contextmanager
+def assert_no_jobs(spark, what: str = "the block"):
+    """Fail if ``what`` (the block) starts any Spark job: the lazy-builder
+    contract, a builder plans and the caller's action runs."""
+    with spark_jobs(spark) as jobs:
+        yield
+    assert not jobs, f"{what} started Spark jobs {sorted(jobs)}"
