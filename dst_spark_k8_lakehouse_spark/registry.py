@@ -55,6 +55,11 @@ def query(query_id: str, oracle: str | None = None) -> Callable[[F], F]:
 # ids whose only green row is the oldest (round 1). Rotation log with
 # last-green round per id lives in COVERAGE.md.
 PRIORITY: list[str] = [
+    # (b) builders whose tables and artifacts resolve from parquet
+    # footers and written schemas, without an inference job:
+    "l6_dsir_scan",
+    "l7_contamination_scan",
+    "d74_lineage",
     # (b) builders that write a Delta checkpoint (column-wise add
     # struct; v2 replays once), directly or by auto-checkpointing:
     "d16_delta_native_dml",
@@ -135,7 +140,6 @@ PRIORITY: list[str] = [
     "t10_kafka_tcp_stream",  # rides the DataSource reader changes
     "t11_kafka_tcp_pipe",  # rides both write faces
     "x13_tcp_bronze",  # rides kafka_tcp + commit lineage
-    "d74_lineage",  # changed: native-commit lineage hook
     # (d) the 8 r06-stale ids (VERDICT r12 item 2 named them):
     "d19_delta_schema_merge",
     "d20_delta_partitioned",
