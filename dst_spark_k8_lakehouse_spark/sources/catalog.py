@@ -73,7 +73,8 @@ def parquet_footer(spark: SparkSession, path: str) -> ParquetFooter | None:
     """The footer of the local parquet file ``path``, read once on the
     driver and memoized by path, mtime, size and the session's
     converter flags; None when ``path`` is not a local file (callers
-    then let Spark infer, and report a missing path, as before).
+    then fall back to Spark's inference, which also reports a missing
+    path).
 
     The schema comes from Spark's own ``readSchemaFromFooter`` with a
     ``ParquetToSparkSchemaConverter`` built exactly as schema inference
